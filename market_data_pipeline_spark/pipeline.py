@@ -13,9 +13,18 @@ Reference parity (SURVEY.md §3):
 - ``validate_data_quality``↦ pipeline.py:377-406 — one aggregate computing
   every check per symbol.
 
-Everything returns DataFrames (lazy); nothing collects. Persisting writes a
-symbol-partitioned parquet dataset — the scale replacement for
-file-per-symbol (pipeline.py:308-313).
+Frames are returned as lazy DataFrames, with one exception: the daily bars
+are built eagerly, once per ``Pipeline``, on the first ``load_bars`` call and
+kept with ``localCheckpoint``. Every bar-derived frame of the instance
+(daily, signals, breadth, health, regime) reads that one snapshot, so the
+tick scan and the (symbol, day) aggregation shuffle run once, and the frames
+are consistent with each other even if the tick files change underneath.
+The snapshot belongs to the instance: it is freed by Spark's context cleaner
+once the instance and the frames built on it are dropped, and a new
+``Pipeline`` reads the ticks afresh. ``localCheckpoint`` gives up lineage,
+so losing an executor that holds snapshot blocks fails the job; the remedy
+is a new ``Pipeline``. Persisting writes a symbol-partitioned parquet
+dataset — the scale replacement for file-per-symbol (pipeline.py:308-313).
 """
 
 from __future__ import annotations
@@ -45,17 +54,29 @@ class Pipeline:
         if isinstance(config, (str, Path)):
             config = load_config(config)
         self.config = config or {}
+        self._bars: DataFrame | None = None
 
     # -- data acquisition ---------------------------------------------------
 
     def load_bars(self) -> DataFrame:
-        """Daily OHLCV bars (derived from the tick stream on testdata)."""
-        return bars_from_events(self.spark, self.source)
+        """Daily OHLCV bars (derived from the tick stream on testdata).
+
+        Built eagerly on the first call and kept with ``localCheckpoint``
+        (not ``cache``, whose plan matching would hand a later ``Pipeline``
+        over rewritten files the old bars); later calls return the same
+        snapshot. It is this instance's consistent view of the ticks and is
+        freed when the instance is dropped. Without lineage, a lost executor
+        fails the job; build a new ``Pipeline`` to recover.
+        """
+        if self._bars is None:
+            self._bars = bars_from_events(self.spark, self.source).localCheckpoint()
+        return self._bars
 
     # -- §3.1 daily update --------------------------------------------------
 
     def run_daily_update(self, bars: DataFrame | None = None, persist_to: str | None = None) -> DataFrame:
-        """Clean + full indicator chain as one lazy plan; optionally persist
+        """Clean + full indicator chain as one lazy plan over ``bars`` (by
+        default the instance's bar snapshot); optionally persist
         symbol-partitioned parquet (the file-per-symbol replacement)."""
         bars = bars if bars is not None else self.load_bars()
         w = series_window(time_col="d")
@@ -82,7 +103,7 @@ class Pipeline:
 
     def run_full_pipeline(self) -> dict[str, DataFrame]:
         """Daily update + breadth/health/regime + signals — every frame of
-        the reference's full mode, all lazy."""
+        the reference's full mode, all lazy over one bar snapshot."""
         enriched = self.run_daily_update()
         br = breadth.derive_breadth(self.load_bars())
         return {

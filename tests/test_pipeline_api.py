@@ -64,6 +64,29 @@ def test_daily_update_produces_indicator_columns(spark, sf_dir):
     assert df.count() > 0
 
 
+def _checkpoint_leaves(df) -> set[int]:
+    """RDD ids of the ``LogicalRDD`` leaves (checkpoint snapshots) of a plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    ids = set()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            ids.add(leaf.rdd().id())
+    return ids
+
+
+def _stage_names(spark, group: str) -> list[str]:
+    """Names of every stage of every job run under ``group``."""
+    st = spark.sparkContext.statusTracker()
+    names = []
+    for job in st.getJobIdsForGroup(group):
+        for stage in st.getJobInfo(job).stageIds:
+            info = st.getStageInfo(stage)
+            if info is not None:
+                names.append(info.name)
+    return names
+
+
 def test_full_pipeline_frames(spark, sf_dir):
     out = Pipeline(spark, sf_dir).run_full_pipeline()
     assert set(out) == {"daily", "breadth", "health", "regime", "signals"}
@@ -71,6 +94,61 @@ def test_full_pipeline_frames(spark, sf_dir):
     n_symbols = out["daily"].select("symbol").distinct().count()
     assert sig.count() == n_symbols  # one signal row per symbol
     assert out["health"].count() == 1 and out["regime"].count() == 1
+    # daily and breadth read one bar snapshot, not two tick scans
+    leaves = _checkpoint_leaves(out["daily"])
+    assert len(leaves) == 1 and _checkpoint_leaves(out["breadth"]) == leaves
+
+
+def test_load_bars_built_once_per_instance(spark, sf_dir):
+    from market_data_pipeline_spark.operators import breadth
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("quality_alone", "quality without bars")
+        Pipeline(spark, sf_dir).validate_data_quality()
+        assert not any(n.startswith("localCheckpoint") for n in _stage_names(spark, "quality_alone"))
+
+        p = Pipeline(spark, sf_dir)
+        bars = p.load_bars()
+        assert p.load_bars() is bars
+        plan = bars._jdf.queryExecution().optimizedPlan().toString().lower()
+        assert "parquet" not in plan and "relation" not in plan
+
+        sc.setJobGroup("breadth_on_snapshot", "breadth over the bar snapshot")
+        br = breadth.derive_breadth(p.load_bars())
+        br.collect()
+        breadth.market_health(br).collect()
+        breadth.market_regime(br).collect()
+        names = _stage_names(spark, "breadth_on_snapshot")
+        assert names and not any(n.startswith(("parquet at", "localCheckpoint")) for n in names)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_load_bars_is_a_snapshot_not_a_cache(spark, sf_dir, tmp_path):
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from market_data_pipeline_spark.operators import breadth
+
+    events = tmp_path / "events.parquet"
+    shutil.copy(f"{sf_dir}/events.parquet", events)
+    p1 = Pipeline(spark, str(tmp_path))
+    bars_before = sorted(p1.load_bars().collect())
+    breadth_before = sorted(breadth.derive_breadth(p1.load_bars()).collect())
+
+    ticks = pq.read_table(events)
+    dropped = ticks.column("user_id")[0].as_py()
+    pq.write_table(ticks.filter(pc.not_equal(ticks["user_id"], dropped)), events)
+
+    assert sorted(p1.load_bars().collect()) == bars_before
+    assert sorted(breadth.derive_breadth(p1.load_bars()).collect()) == breadth_before
+    fresh = {r.symbol for r in Pipeline(spark, str(tmp_path)).load_bars().select("symbol").collect()}
+    assert fresh == {r.symbol for r in bars_before} - {dropped}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_validate_data_quality_columns(spark, sf_dir):
