@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# directory holding the package, so Python workers can import ``pyworker``
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "market_data_pipeline_spark") -> SparkSession:
     """Build (or reuse) the canonical session.
@@ -20,11 +23,22 @@ def get_spark(app_name: str = "market_data_pipeline_spark") -> SparkSession:
     Scale notes (tuned for local[32] testing, shaped for a real cluster):
     - AQE on: runtime partition coalescing + skew-join splitting replace the
       reference's hand-tuned thread pool (src/pipeline.py:217-243).
-    - shuffle.partitions defaults to ~cores locally; on a 1000-executor
-      cluster this is overridden by AQE target sizes anyway.
+    - shuffle.partitions is pinned at 32 (AQE coalesces small stages); on a
+      1000-executor cluster this is overridden by AQE target sizes anyway.
     - ANSI off: the reference's semantics are ``errors='coerce'`` (bad cast ->
       null, /0 -> null), which is classic-Spark and matches DuckDB doubles.
     - Arrow on: every pandas-UDF hop is vectorized.
+    - Python workers fork from ``pyworker`` instead of ``pyspark.daemon``.
+      Before each task the stock worker calls ``importlib.invalidate_caches()``,
+      and on CPython < 3.13 every zip importer on the worker path re-parses
+      its archive's whole directory in pure Python: 16 importers (12 over
+      ``pyspark.zip``, 2 each over the spark-core jar and py4j), 0.15-0.25 s
+      of fixed cost per Python task on 3.11, ~40 % of a ``quote_stream``
+      micro-batch. ``pyworker`` re-reads an archive only when its mtime or
+      size changed. The daemon module is a static conf, so sessions we only
+      ``tune_existing`` keep the stock daemon; ``executorEnv.PYTHONPATH``
+      lets workers import it whatever the driver's cwd. Drop both confs once
+      the engine requires CPython >= 3.13, whose zipimport reads lazily.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -49,6 +63,8 @@ def get_spark(app_name: str = "market_data_pipeline_spark") -> SparkSession:
         # only adds scheduler latency (on a real cluster leave the default)
         .config("spark.locality.wait", "0s")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.python.daemon.module", "market_data_pipeline_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
