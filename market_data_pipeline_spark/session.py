@@ -39,6 +39,20 @@ def get_spark(app_name: str = "market_data_pipeline_spark") -> SparkSession:
       ``tune_existing`` keep the stock daemon; ``executorEnv.PYTHONPATH``
       lets workers import it whatever the driver's cwd. Drop both confs once
       the engine requires CPython >= 3.13, whose zipimport reads lazily.
+    - Streaming checkpoints go through ``FileSystemBasedCheckpointFileManager``
+      (the offset WAL, commit log, file-source log and state-store files).
+      Without the native Hadoop library, the default FileContext-based
+      manager makes the local file system fork a ``chmod`` for every file it
+      creates and a ``readlink`` for every rename check: 20 forks and ~35 ms
+      per atomic checkpoint file. A micro-batch of a query with 8 state
+      partitions writes 19 such files (a delta and its checksum file per
+      partition, the offset, commit and file-source log entries). The
+      FileSystem manager writes the same files (``.crc`` and Spark's own
+      checkpoint checksums included) with 4 forks and ~10 ms per file. Its
+      no-overwrite rename is ``exists`` then ``rename``; on the local file
+      system FileContext's ``Rename.NONE`` is the same check-then-rename, so
+      exactly-once holds as before. ``tune_existing`` leaves this conf alone,
+      so sessions built elsewhere keep Spark's default manager.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -65,6 +79,11 @@ def get_spark(app_name: str = "market_data_pipeline_spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.python.daemon.module", "market_data_pipeline_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

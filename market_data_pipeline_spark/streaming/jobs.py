@@ -137,8 +137,13 @@ def stream_shuffle_partitions() -> int:
     throughput, never inherit a batch-session default sized to core
     count. The default 8 fits the test corpora (~150 active keys; each
     extra state partition costs a task + a per-micro-batch state-store
-    commit file, so 32 partitions over 150 keys paid 4x the scaffold for
-    zero parallelism win — guide §2.2 "fewer, larger partitions").
+    commit, so 32 partitions over 150 keys paid 4x the scaffold for
+    zero parallelism win — guide §2.2 "fewer, larger partitions"). That
+    commit's ``commitTimeMs`` per partition per micro-batch, measured for
+    ``streaming_anomaly_zscore`` over 150 keys on 4 cores: median ~8 ms
+    with the FileSystem checkpoint manager ``get_spark`` sets, ~100 ms
+    with Spark's default FileContext manager on a host without the
+    native Hadoop library.
     Override with $SPARK_GRAFT_STREAM_PARTITIONS for a real deployment.
     The queries here use fresh per-run checkpoints, so the pin is safe."""
     import os

@@ -17,16 +17,29 @@ from typing import Any
 def progress_rows(query: Any) -> list[dict]:
     """Flatten ``query.recentProgress`` into one dict per micro-batch:
     batch_id, input rows, processed rows/sec, batch duration, total state
-    rows/bytes across stateful operators, and the event-time watermark."""
+    rows/bytes across stateful operators, and the event-time watermark.
+
+    The batch's phases come along, in ms: ``latest_offset_ms`` (asking the
+    sources), ``query_planning_ms``, ``add_batch_ms`` (running the batch into
+    the sink), ``wal_commit_ms`` and ``commit_offsets_ms`` (the offset WAL
+    and commit log writes), and ``state_commit_ms``, the state-store commit
+    time summed over stateful operators (each already sums its tasks)."""
     out = []
     for p in query.recentProgress or []:
         state = p.get("stateOperators") or []
+        dur = p.get("durationMs") or {}
         out.append(
             {
                 "batch_id": p.get("batchId"),
                 "num_input_rows": p.get("numInputRows", 0),
                 "rows_per_sec": p.get("processedRowsPerSecond", 0.0),
-                "batch_duration_ms": (p.get("durationMs") or {}).get("triggerExecution"),
+                "batch_duration_ms": dur.get("triggerExecution"),
+                "latest_offset_ms": dur.get("latestOffset", 0),
+                "query_planning_ms": dur.get("queryPlanning", 0),
+                "add_batch_ms": dur.get("addBatch", 0),
+                "wal_commit_ms": dur.get("walCommit", 0),
+                "commit_offsets_ms": dur.get("commitOffsets", 0),
+                "state_commit_ms": sum(s.get("commitTimeMs", 0) for s in state),
                 "state_rows": sum(s.get("numRowsTotal", 0) for s in state),
                 "state_bytes": sum(s.get("memoryUsedBytes", 0) for s in state),
                 "n_state_operators": len(state),

@@ -76,23 +76,27 @@ def streaming_anomaly_zscore(
         else:
             n, mean, m2 = 0, 0.0, 0.0
         out = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-            for ev_id, v in zip(pdf["event_id"], pd.to_numeric(pdf["value"], errors="coerce")):
-                if pd.isna(v):
-                    continue
-                v = float(v)
-                if n >= min_obs:
-                    var = m2 / (n - 1) if n > 1 else 0.0
-                    sd = var ** 0.5
-                    z = (v - mean) / sd if sd > 0 else 0.0
-                else:
-                    z = 0.0
-                out.append((int(ev_id), v, round(z, 4), n >= min_obs and abs(z) > threshold))
-                n += 1
-                delta = v - mean
-                mean += delta / n
-                m2 += delta * (v - mean)
+        chunks = list(pdf_iter)
+        # Arrow hands a key with more than maxRecordsPerBatch rows over as
+        # several chunks: concat BEFORE sorting so the Welford replay sees
+        # the whole batch in (ts, event_id) order
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+        for ev_id, v in zip(pdf["event_id"], pd.to_numeric(pdf["value"], errors="coerce")):
+            if pd.isna(v):
+                continue
+            v = float(v)
+            if n >= min_obs:
+                var = m2 / (n - 1) if n > 1 else 0.0
+                sd = var ** 0.5
+                z = (v - mean) / sd if sd > 0 else 0.0
+            else:
+                z = 0.0
+            out.append((int(ev_id), v, round(z, 4), n >= min_obs and abs(z) > threshold))
+            n += 1
+            delta = v - mean
+            mean += delta / n
+            m2 += delta * (v - mean)
         state.update((n, mean, m2))
         yield pd.DataFrame(
             {
@@ -103,8 +107,6 @@ def streaming_anomaly_zscore(
                 "is_anomaly": [o[3] for o in out],
             }
         )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     return events.groupBy("user_id").applyInPandasWithState(
         update,

@@ -299,6 +299,84 @@ def test_stateful_state_survives_query_restart(spark, tmp_path):
     assert abs(spike.zscore - round(want_z, 4)) < 1e-9
 
 
+def test_anomaly_zscore_orders_a_key_split_across_arrow_chunks(spark, tmp_path):
+    """A key with more rows in one micro-batch than
+    ``arrow.maxRecordsPerBatch`` reaches the Welford update as several
+    Arrow chunks. The whole batch must still be replayed in (ts, event_id)
+    order: every z-score and flag equals a Welford replay over the sorted
+    events, even though the file's row order is not time order."""
+    import random
+
+    from market_data_pipeline_spark.streaming import jobs, stateful
+
+    rnd = random.Random(5)
+    t = dt.datetime(2024, 1, 1, 12, 0, 0)
+    events = [
+        (3, i, t + dt.timedelta(seconds=i), 10.0 + rnd.gauss(0, 1) + (8.0 if i % 13 == 12 else 0.0))
+        for i in range(40)
+    ]
+    rows = events[:]
+    rnd.shuffle(rows)
+    schema = "user_id long, event_id long, ts timestamp, value double"
+    src = str(tmp_path / "chunks_src")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        stream = spark.readStream.schema(schema).parquet(src)
+        flagged = stateful.streaming_anomaly_zscore(stream, threshold=2.0, min_obs=10)
+        got = {
+            r.event_id: (r.zscore, r.is_anomaly)
+            for r in jobs.run_stream_to_memory(spark, flagged, "anom_chunks", "append").collect()
+        }
+    finally:
+        spark.conf.set(key, prev)
+
+    want = {}
+    n, mean, m2 = 0, 0.0, 0.0
+    for _, ev_id, _, v in sorted(events, key=lambda e: (e[2], e[1])):
+        sd = (m2 / (n - 1)) ** 0.5 if n > 1 else 0.0
+        z = (v - mean) / sd if n >= 10 and sd > 0 else 0.0
+        want[ev_id] = (round(z, 4), n >= 10 and abs(z) > 2.0)
+        n += 1
+        delta = v - mean
+        mean += delta / n
+        m2 += delta * (v - mean)
+    assert got == want
+    assert any(flag for _, flag in want.values())
+
+
+def test_checkpoint_file_manager_never_overwrites(spark, tmp_path):
+    """Checkpoint files go through the FileSystem-based manager, which keeps
+    the guarantees exactly-once rests on: a second no-overwrite atomic
+    create of an existing file fails and leaves the first content, and a
+    cancelled create leaves nothing at its final path."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        path(f"file:{tmp_path}"), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    assert mgr.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    def create(name, payload):
+        out = mgr.createAtomic(path(f"file:{tmp_path}/{name}"), False)
+        out.write(payload)
+        return out
+
+    create("0", b"first").close()
+    second = create("0", b"second")
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExistsException"):
+        second.close()
+    assert (tmp_path / "0").read_bytes() == b"first"
+
+    create("1", b"never").cancel()
+    assert not (tmp_path / "1").exists()
+
+
 def test_streaming_sessionize_matches_batch_twin(spark, sf_dir):
     """Streamed sessions (gap splits + watermark timeouts) must equal the
     batch sessionization minus each user's still-open last session, unless
@@ -353,6 +431,16 @@ def test_progress_monitor_extracts_state_and_watermark(spark, sf_dir, tmp_path):
     assert sum(r["num_input_rows"] for r in rows) > 0
     assert any(r["n_state_operators"] > 0 for r in rows)
     assert any(r["watermark"] for r in rows)
+    for r in rows:
+        for k in (
+            "latest_offset_ms",
+            "query_planning_ms",
+            "add_batch_ms",
+            "wal_commit_ms",
+            "commit_offsets_ms",
+            "state_commit_ms",
+        ):
+            assert r[k] >= 0, k
     flags = monitor.health_flags(rows, max_batch_ms=10 * 60 * 1000)
     assert flags["total_input_rows"] > 0 and flags["slow_batches"] == []
 
