@@ -13,10 +13,22 @@ Conventions:
 - the EMA/MACD recursion is oracle-checked via a DuckDB RECURSIVE CTE whose
   update rule is bitwise-equal to pandas ``ewm(adjust=False)``; only SimHash
   bit math and media byte stats remain rows-only (pytest oracles in tests/).
+
+``queries()`` orders the registry for the driver, which checks its first
+50 names per run: queries with no clean row in any committed
+``CORRECTNESS_r*.json`` come first, in registration order, then the green
+ones stalest first (by last clean round, then name). Each returned function
+applies ``tune_existing`` to the session before building its frame, so no
+query body pins session confs itself.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -82,12 +94,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _series(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return series_from_events(spark, sf)
 
 
 def _bars(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return bars_from_events(spark, sf)
 
 
@@ -99,7 +109,6 @@ def _docs(spark: SparkSession, sf: str) -> DataFrame:
     a full corpus shuffle at scale, so it is GATED on the scan actually
     being under-parallelised (fewer scan partitions than half the cores) —
     on real multi-split inputs it disappears entirely."""
-    tune_existing(spark)
     d = load_table(spark, sf, "documents")
     target = spark.sparkContext.defaultParallelism
     if d.rdd.getNumPartitions() < max(2, target // 2):
@@ -1000,7 +1009,6 @@ WHERE rsi < 60 AND close > ma_10
 
 
 def q_q1_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.pricing_summary(spark, sf)
 
 
@@ -1021,7 +1029,6 @@ GROUP BY l_returnflag, l_linestatus
 
 
 def q_q5_revenue_by_nation(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.revenue_by_nation(spark, sf)
 
 
@@ -1039,7 +1046,6 @@ GROUP BY r_name, n_name
 
 
 def q_q3_top_orders(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.top_orders_by_revenue(spark, sf, n=10)
 
 
@@ -1054,7 +1060,6 @@ LIMIT 10
 
 
 def q_j_anti(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.customers_without_orders(spark, sf)
 
 
@@ -1065,7 +1070,6 @@ WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 
 
 def q_j_semi(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.customers_with_orders(spark, sf)
 
 
@@ -1076,7 +1080,6 @@ WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
 
 
 def q_j2_brand_lookup(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.part_supplier_lookup(spark, sf)
 
 
@@ -1088,7 +1091,6 @@ GROUP BY p_brand
 
 
 def q_o4_topk_per_group(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.top_k_per_group(spark, sf, k=3)
 
 
@@ -1102,7 +1104,6 @@ SELECT c_mktsegment, o_orderkey, o_totalprice, rk FROM (
 
 
 def q_u_set_ops(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.segment_set_ops(spark, sf)
 
 
@@ -1118,7 +1119,6 @@ SELECT c_nationkey, 'except' AS set_op FROM (SELECT DISTINCT c_nationkey FROM (S
 
 
 def q_rollup_revenue(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.rollup_revenue(spark, sf)
 
 
@@ -1129,7 +1129,6 @@ FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
 
 
 def q_a_percentiles(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.price_percentiles(spark, sf)
 
 
@@ -1145,7 +1144,6 @@ GROUP BY c_mktsegment
 
 
 def q_cube_counts(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.cube_counts(spark, sf)
 
 
@@ -1156,7 +1154,6 @@ FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
 
 
 def q_pivot_status(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.pivot_status_by_segment(spark, sf)
 
 
@@ -1179,7 +1176,6 @@ SQL_A5 = "SELECT c_mktsegment, count(*) AS n FROM customer GROUP BY c_mktsegment
 
 
 def q_a9_sector_median(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     c = load_table(spark, sf, "customer")
     out = fundamentals.sector_median_comparison(c, "c_nationkey", ("c_acctbal",))
     return out.select(
@@ -1203,7 +1199,6 @@ FROM customer JOIN med ON customer.c_nationkey = med.c_nationkey
 
 
 def q_a10_dcf(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     o = load_table(spark, sf, "orders").withColumn(
         "__ord", F.struct("o_orderdate", "o_orderkey")
     )
@@ -1226,7 +1221,6 @@ SELECT o_custkey, n_periods, CASE WHEN n_periods >= 3 THEN pv_sum END AS fair_va
 
 
 def q_a11_fundamental_score(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     c = load_table(spark, sf, "customer")
     seg_avg = c.groupBy("c_mktsegment").agg(
         F.avg(F.col("c_acctbal") / 10000.0).alias("sector_avg_roe"),
@@ -1278,7 +1272,6 @@ FROM m
 
 
 def q_a12_red_flags(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     b = _bars(spark, sf).withColumn("flow", F.round(F.col("close") - F.col("open"), 4))
     return fundamentals.red_flags(
         b, key_col="symbol", period_col="d", revenue_col="volume", cf_col="flow"
@@ -1969,7 +1962,6 @@ def q_t_textrank(spark: SparkSession, sf: str) -> DataFrame:
     corpus word-adjacency graph, top 25 — the graph-centrality complement
     to frequency (top_ngrams) and discrimination (tfidf). Rides
     graph.pagerank's quantized loop, so the chained-CTE oracle is exact."""
-    tune_existing(spark)
     return text.textrank_keywords(_docs(spark, sf), k=25, iterations=10)
 
 
@@ -2301,7 +2293,6 @@ SELECT vec_id, CAST(list_position(sims, list_max(sims)) - 1 AS INTEGER) AS cell 
 
 
 def q_st_tumbling(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     ev = streaming_jobs.stream_events(spark, sf)
     agg = streaming_jobs.tumbling_window_agg(ev, width="1 hour")
     return streaming_jobs.run_stream_to_memory(spark, agg, "tumbling")
@@ -2315,7 +2306,6 @@ FROM events GROUP BY 1, 2
 
 
 def q_st_sliding(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     ev = streaming_jobs.stream_events(spark, sf)
     agg = streaming_jobs.sliding_window_agg(ev, width="2 hours", slide="1 hour")
     return streaming_jobs.run_stream_to_memory(spark, agg, "sliding")
@@ -2356,7 +2346,6 @@ FROM s2 GROUP BY user_id, session_id
 
 
 def q_st_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     ev = streaming_jobs.stream_events(spark, sf)
     out = streaming_jobs.streaming_dedup(ev).select("event_id", "user_id", "ts", "value")
     return streaming_jobs.run_stream_to_memory(spark, out, "st_dedup", output_mode="append")
@@ -2774,7 +2763,6 @@ FROM orders GROUP BY o_orderstatus
 def q_o3_leading_sectors(spark: SparkSession, sf: str) -> DataFrame:
     """O3 — leading sectors: top-10 nation groups by revenue, desc
     (breadth_extractor.py:218, breadth_analyzer.py:89-90)."""
-    tune_existing(spark)
     rev = relational.revenue_by_nation(spark, sf)
     return rev.orderBy(F.col("revenue").desc(), F.col("n_name")).limit(10)
 
@@ -2942,7 +2930,6 @@ SELECT DISTINCT upper(trim(source)) AS symbol FROM documents ORDER BY symbol
 def q_st_session_stream(spark: SparkSession, sf: str) -> DataFrame:
     """True streaming session windows (native session_window + watermark);
     same session boundaries as the batch gaps-and-islands twin."""
-    tune_existing(spark)
     ev = streaming_jobs.stream_events(spark, sf)
     agg = streaming_jobs.session_window_stream(ev, gap="30 minutes")
     return streaming_jobs.run_stream_to_memory(spark, agg, "session_stream")
@@ -2970,7 +2957,6 @@ def q_st_stateful_totals(spark: SparkSession, sf: str) -> DataFrame:
     final emission per key equals the batch aggregate."""
     from market_data_pipeline_spark.streaming import stateful
 
-    tune_existing(spark)
     ev = streaming_jobs.stream_events(spark, sf)
     out = streaming_jobs.run_stream_to_memory(
         spark, stateful.running_totals(ev), "stateful_totals", output_mode="update"
@@ -3000,7 +2986,6 @@ def q_st_cusum(spark: SparkSession, sf: str) -> DataFrame:
     the batch recursion, which is what the recursive-CTE oracle replays."""
     from market_data_pipeline_spark.streaming import stateful
 
-    tune_existing(spark)
     ev = load_table(spark, sf, "events")
     baseline = (
         ev.groupBy("user_id")
@@ -3396,7 +3381,6 @@ FROM m JOIN dims USING (media_id) LEFT JOIN s USING (media_id)
 def q_a_distinct_counts(spark: SparkSession, sf: str) -> DataFrame:
     """Exact distinct counts (§2.4 extension); the HLL++ approx variant is
     asserted within tolerance in tests (cross-engine sketch values differ)."""
-    tune_existing(spark)
     return relational.distinct_sketches(spark, sf)
 
 
@@ -3536,7 +3520,6 @@ _REGISTRY.update(
 
 
 def q_q6_selective_revenue(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.selective_revenue(spark, sf, year=1996)
 
 
@@ -3550,7 +3533,6 @@ WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
 
 
 def q_q4_priority_exists(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.priority_order_counts(spark, sf, quarter_start="1996-07-01")
 
 
@@ -3567,7 +3549,6 @@ GROUP BY o_orderpriority
 
 
 def q_q10_returned_items(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.returned_item_losses(spark, sf, n=20)
 
 
@@ -3587,7 +3568,6 @@ LIMIT 20
 
 
 def q_q12_priority_buckets(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.priority_line_buckets(spark, sf, year=1996)
 
 
@@ -3602,7 +3582,6 @@ GROUP BY l_linestatus
 
 
 def q_q14_promo_share(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.promo_revenue_share(spark, sf, month_start="1996-09-01")
 
 
@@ -3617,7 +3596,6 @@ WHERE l_shipdate >= DATE '1996-09-01' AND l_shipdate < DATE '1996-10-01'
 
 
 def q_q18_large_orders(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.large_quantity_orders(spark, sf, threshold=250.0)
 
 
@@ -3636,7 +3614,6 @@ ORDER BY total_qty DESC, o_orderkey
 
 
 def q_q11_supplier_share(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.supplier_value_share(spark, sf, fraction=0.0105)
 
 
@@ -3650,7 +3627,6 @@ HAVING sum(l_extendedprice * (1 - l_discount)) >
 
 
 def q_q15_top_supplier(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.top_revenue_suppliers(spark, sf, year=1996)
 
 
@@ -3668,7 +3644,6 @@ WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
 
 
 def q_q22_idle_customers(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.idle_rich_customers(spark, sf)
 
 
@@ -3683,7 +3658,6 @@ GROUP BY c_nationkey
 
 
 def q_q2_min_cost_supplier(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.min_cost_supplier_per_part(spark, sf, p_size=15)
 
 
@@ -3703,7 +3677,6 @@ WHERE unit_price = (
 
 
 def q_grouping_sets(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.grouping_sets_revenue(spark, sf)
 
 
@@ -3719,7 +3692,6 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 
 
 def q_w_rank_funcs(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.balance_rank_profile(spark, sf)
 
 
@@ -3831,7 +3803,6 @@ SELECT doc_id, term, tf, tfidf, rk FROM (
 
 
 def q_e_funnel(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return behavior.conversion_funnel(spark, sf)
 
 
@@ -3856,7 +3827,6 @@ UNION ALL SELECT '3_purchase', count(*) FROM p
 
 
 def q_e_retention(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return behavior.retention_cohorts(spark, sf)
 
 
@@ -3873,7 +3843,6 @@ GROUP BY 1, 2
 
 
 def q_st_static_join(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     ev = streaming_jobs.stream_events(spark, sf)
     agg = streaming_jobs.stream_static_enrich(spark, sf, ev)
     return streaming_jobs.run_stream_to_memory(spark, agg, "static_join")
@@ -4087,7 +4056,6 @@ GROUP BY p_type
 
 
 def q_j_band_join(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.orders_price_bands(spark, sf)
 
 
@@ -4106,7 +4074,6 @@ GROUP BY band
 
 
 def q_u_unpivot(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.unpivot_status_counts(spark, sf)
 
 
@@ -4142,7 +4109,6 @@ WHERE (event_id * 2654435761) % 10000 < 2000
 
 
 def q_e_transitions(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return behavior.event_transitions(spark, sf)
 
 
@@ -4306,7 +4272,6 @@ FROM u GROUP BY 1, 2 ORDER BY 1, 2
 
 
 def q_a_mom_growth(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.monthly_revenue_growth(spark, sf)
 
 
@@ -4362,17 +4327,46 @@ _REGISTRY.update(
 )
 
 
+def _last_clean_rounds() -> dict[str, int]:
+    """name -> last round with a clean row (err null, no field False) in the
+    CORRECTNESS_r<NN>.json files committed beside this module."""
+    rounds: dict[str, int] = {}
+    here = os.path.dirname(os.path.abspath(__file__))
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            for name, row in json.load(fh).items():
+                if row.get("err") is None and not any(v is False for v in row.values()):
+                    rounds[name] = max(rounds.get(name, 0), rnd)
+    return rounds
+
+
+def _driver_order() -> list[str]:
+    last = _last_clean_rounds()
+    pending = [n for n in _REGISTRY if n not in last]
+    green = sorted((n for n in _REGISTRY if n in last), key=lambda n: (last[n], n))
+    return pending + green
+
+
+def _tuned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf: str) -> DataFrame:
+        tune_existing(spark)
+        return fn(spark, sf)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # rotation applied at CALL time so late registration blocks can never
-    # land outside the driver-window scheme (see _rotate_registry below)
-    return {name: fn for name, (fn, _sql) in _rotate_registry(_REGISTRY).items()}
+    # ordered at call time: registration blocks below this line count too
+    return {name: _tuned(_REGISTRY[name][0]) for name in _driver_order()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        name: sql
-        for name, (_fn, sql) in _rotate_registry(_REGISTRY).items()
-        if sql is not None
+        name: _REGISTRY[name][1]
+        for name in _driver_order()
+        if _REGISTRY[name][1] is not None
     }
 
 
@@ -4383,7 +4377,6 @@ def oracle_sql() -> dict[str, str]:
 
 
 def q_q7_volume_shipping(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.volume_shipping(spark, sf)
 
 
@@ -4408,7 +4401,6 @@ GROUP BY supp_nation, cust_nation, l_year
 
 
 def q_q8_market_share(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.national_market_share(spark, sf)
 
 
@@ -4434,7 +4426,6 @@ GROUP BY 1
 
 
 def q_q9_product_profit(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.product_type_profit(spark, sf)
 
 
@@ -4452,7 +4443,6 @@ GROUP BY 1, 2
 
 
 def q_q13_order_distribution(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.customer_order_distribution(spark, sf)
 
 
@@ -4469,7 +4459,6 @@ GROUP BY c_count
 
 
 def q_q16_part_variety(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.supplier_part_variety(spark, sf)
 
 
@@ -4484,7 +4473,6 @@ GROUP BY 1, 2, 3
 
 
 def q_q17_small_qty(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.small_quantity_revenue(spark, sf)
 
 
@@ -4499,7 +4487,6 @@ WHERE p_brand = 'Brand#3'
 
 
 def q_q19_disjunctive(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.disjunctive_band_revenue(spark, sf)
 
 
@@ -4514,7 +4501,6 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 
 
 
 def q_q20_dominant_suppliers(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.dominant_part_suppliers(spark, sf)
 
 
@@ -4542,7 +4528,6 @@ WHERE s_suppkey IN (
 
 
 def q_q21_late_suppliers(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return relational.late_sole_blame_suppliers(spark, sf)
 
 
@@ -4585,7 +4570,6 @@ _REGISTRY.update(
 
 
 def q_st_stream_join(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     joined = streaming_jobs.stream_stream_attribution(spark, sf)
     return streaming_jobs.run_stream_to_memory(spark, joined, "attribution", output_mode="append")
 
@@ -5260,7 +5244,6 @@ def q_st_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     ``end + gap`` precedes ``max(ts) − delay``."""
     from market_data_pipeline_spark.streaming import stateful
 
-    tune_existing(spark)
     ev = streaming_jobs.stream_events(spark, sf).select("user_id", "ts", "value")
     sess = stateful.streaming_sessionize(ev, gap_minutes=30, watermark="10 minutes")
     out = streaming_jobs.run_stream_to_memory(
@@ -5978,272 +5961,6 @@ _REGISTRY.update({"inv_a_vw_index": (q_a_vw_index, SQL_A_VW_INDEX)})
 
 
 # ---------------------------------------------------------------------------
-# Driver-window rotation.
-#
-# The driver's correctness gate consumes the FIRST 50 entries of ``queries()``
-# in registration order per round (observed round 1: the checked set was
-# exactly the first 50 registered names). With 171 registered queries, a fixed
-# order would leave most of the surface without driver evidence forever, so
-# the registry is re-ordered here: queries with no driver-green row yet come
-# first (they enter the next round's window), already-green queries rotate to
-# the back. ``_DRIVER_GREEN`` is the union of all green names from
-# CORRECTNESS_r*.json; append each round's newly-checked names so the window
-# keeps advancing until every query has a green row (~3 rounds).
-# ---------------------------------------------------------------------------
-
-# Static floor: round-1 green names (kept as a fallback if the JSON files
-# are ever absent from the working copy). The authoritative set is computed
-# below by scanning every CORRECTNESS_r*.json beside this file, so each new
-# round's results rotate the window WITHOUT a manual edit.
-_STATIC_GREEN: frozenset[str] = frozenset({
-    # round 1 (CORRECTNESS_r01.json — 50/50 green)
-    "inv_p1_series_normalize", "inv_p4_dedupe_keep_last", "inv_p5_props_cast",
-    "inv_p7_symbol_filter", "inv_p8_exchange_predicate", "inv_p11_prefix_filter",
-    "inv_p13_criteria_screen", "inv_w1_sma", "inv_w3_rsi", "inv_w5_bollinger",
-    "inv_w8_returns_momentum", "inv_w9_ytd", "inv_w10_dist_ma", "inv_w15_divergence",
-    "inv_w17_ffill", "inv_s1_bars_ohlcv", "inv_w6_atr", "inv_w7_volume_obv",
-    "inv_w_vwap", "inv_w_stochastic", "inv_w_drawdown", "inv_w_rolling_beta",
-    "inv_q_histogram", "inv_w11_support_resistance", "inv_w12_breakout",
-    "inv_w13_trend", "inv_w16_rolling_corr", "inv_w18_densify", "inv_a1_breadth",
-    "inv_a2_market_health", "inv_w19_regime", "inv_o5_top_movers",
-    "inv_a13_weekly_return", "inv_a6a8_quality", "inv_q_profile_orders",
-    "inv_q1_pricing_summary", "inv_q5_revenue_by_nation", "inv_q3_top_orders",
-    "inv_j_anti_no_orders", "inv_j_semi_with_orders", "inv_j2_brand_lookup",
-    "inv_o4_topk_per_group", "inv_u_set_ops", "inv_a_percentiles",
-    "inv_rollup_revenue", "inv_cube_counts", "inv_pivot_status",
-    "inv_a5_segment_counts", "inv_a9_sector_median", "inv_a10_dcf",
-})
-
-
-def _driver_green_rounds() -> dict[str, int]:
-    """(name -> LAST round with a clean driver row, max CORRECTNESS file
-    index). A row is clean when err is null and no field is False — a
-    failed check keeps the query IN the window for re-verification after a
-    fix. The CORRECTNESS_r*.json files this reads are committed to the
-    repo, so ordering is identical in a fresh clone. The static floor
-    counts as round 1."""
-    import glob
-    import json as _json
-    import os
-    import re as _re
-
-    rounds: dict[str, int] = {n: 1 for n in _STATIC_GREEN}
-    max_file_round = 1
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        max_file_round = max(max_file_round, rnd)
-        try:
-            with open(path) as fh:
-                rec = _json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rec.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err") is None and not any(v is False for v in row.values()):
-                rounds[name] = max(rounds.get(name, 0), rnd)
-    return rounds, max_file_round
-
-
-_GREEN_ROUNDS, _MAX_FILE_ROUND = _driver_green_rounds()
-_DRIVER_GREEN = frozenset(_GREEN_ROUNDS)
-# The round the NEXT driver run records: r01..rN FILES present -> round N+1.
-# Keyed off the file index, not the max green round — a crashed driver run
-# that wrote a file with zero clean rows must still advance the round, or
-# the reverify lists and the resample rotation would repeat a stale round.
-_THIS_ROUND = _MAX_FILE_ROUND + 1
-
-# Families the round-1 verdict asked to see first: the TPC-H completion set,
-# the streaming ladder, and the dedup/similarity ladder. Within the pending
-# set these lead; everything else keeps registration order behind them.
-_WINDOW_PRIORITY_PREFIXES = ("inv_q", "inv_st_", "inv_d_", "inv_sim_")
-
-# Explicit head of the window. Round 7 (r6 verdict task #1): the 18
-# round-6 additions whose only green evidence is the judge's local verify
-# run (J6) must land DRIVER rows this round — they outrank this round's
-# brand-new queries (which carry fresh full-gate evidence of their own).
-# The round-6 lead names all landed D6 rows, so the pending filter drops
-# them for free; they are replaced rather than appended.
-_WINDOW_LEAD_NAMES = (
-    "inv_e_top_paths", "inv_g_assoc_rules", "inv_g_link_prediction",
-    "inv_s_versioned_diff", "inv_t_bm25_ndcg", "inv_t_bm25_topk",
-    "inv_t_maxmatch_encode", "inv_t_unigram_encode", "inv_t_unigram_lm",
-    "inv_w_cusum", "inv_w_holt_forecast", "inv_w_seasonal_decomp",
-    "inv_w_theil_sen", "inv_x_calibration", "inv_x_host_quota",
-    "inv_x_neyman_alloc", "inv_x_ols_regression", "inv_x_robust_anomaly",
-)
-
-# Modified-since-green: queries whose implementation or oracle changed in a
-# given round AFTER they already had a green driver row. Their green status is
-# stale evidence, so they re-enter the window ahead of the green tail (r2
-# advice: "invalidate green status when the query's implementation changes").
-# Keyed by round so each list expires once that round's driver row lands.
-_REVERIFY_BY_ROUND: dict[int, tuple[str, ...]] = {
-    # round 3: (a) oracles type-pinned (DuckDB HUGEINT/DECIMAL/int-width
-    # drift vs the driver's raw value hash — the inv_q12 root cause, audited
-    # repo-wide via tools/oracle_type_audit.py); (b) greens whose
-    # implementation changed late in r3 — bars_from_events' symbol
-    # repartition (re-check the bar-family root + breadth) and the
-    # [\s\v] oracle-regex change (re-check via the pack companion).
-    3: (
-        "inv_q_histogram", "inv_o4_topk_per_group", "inv_sim_bruteforce_topk",
-        "inv_q7_volume_shipping", "inv_q8_market_share", "inv_q9_product_profit",
-        "inv_grouping_sets", "inv_x_mixture_plan",
-        "inv_s1_bars_ohlcv", "inv_a1_breadth", "inv_x_pack_stats",
-        # (c) equi-depth histogram rebuilt as a two-pass distributed rank
-        # (no single-partition WindowExec) — r2-green impl changed in r3
-        "inv_q_histogram_eqdepth",
-        # (d) dup_groups convergence check fused into the checkpointed
-        # round (one action per round) — r2-green dependents changed in r3
-        "inv_d_dup_groups", "inv_d_dedup_near",
-    ),
-    # round 5 (deferred from r4 so r4's 48 slots stay on never-checked
-    # queries, per the r3 verdict): greens whose implementation changed in
-    # r4 — near_dup_members now defaults to the hot-bucket cap
-    # (dedup.bucket_pair_candidates), so the group-forming dedup queries'
-    # green rows are stale evidence; r4 also rewired dup_groups onto star
-    # contraction, touching every consumer of connected components.
-    5: (
-        "inv_d_dup_groups", "inv_d_dedup_near", "inv_d_dedup_best",
-        "inv_d_minhash_lsh", "inv_sim_near_dups", "inv_d_incremental",
-        # late r4: dup_groups gained the measured-count local-finish gate
-        # and the capstones consume it — their green rows predate that
-        "inv_x_curated_corpus", "inv_x_semantic_curation",
-        # late r4: jpeg decoder rewritten multi-scan (progressive support)
-        "inv_m_jpeg_roundtrip",
-    ),
-    # round 6: greens whose implementation changed in r5 AFTER their last
-    # driver row — the as-of joins moved to an atomic single-struct payload
-    # fill (r4 advice: per-column fills could mix right rows), the rolling
-    # correlation folded its driver-side symbol lookups into one lazy plan,
-    # and the dup_groups pre-loop local-finish gate touched every
-    # components consumer again (the r5 list re-checks the r4 crop; these
-    # are the names whose r5-window rows will predate the late-r5 change
-    # if the window drew them early).
-    6: (
-        "inv_asof_join_bars", "inv_asof_forward_tolerance",
-        "inv_w_rolling_corr", "inv_d_dup_groups",
-        "inv_x_curated_corpus", "inv_x_semantic_curation",
-        # r6: jaccard_prefix rebuilt (token-set collapse + asymmetric
-        # index prefix) after its last green row — stale evidence
-        "inv_d_jaccard_prefix",
-        # r6: avcodec decode paths changed (ADPCM short-final-block +
-        # fact-chunk trim, Y4M C411/C420-whitelist) — the generated
-        # streams in these queries are unaffected by construction, but
-        # their green rows predate the change
-        "inv_m_audio_stats", "inv_m_frame_sample",
-        # r6: merge_upsert gained atomic CDC deletes (key-envelope now
-        # spans both halves) — the merge query's green row predates it
-        "inv_s_versioned_merge",
-    ),
-    # round 7: greens whose implementation changed in r7 after their last
-    # driver row — (a) cusum_alarms' fold sort gained the deterministic
-    # event_id tiebreak (r6 ADVICE: equal-ts events could be folded in
-    # value order while the streaming twin processes them in event_id
-    # order — the equivalence test now passes tiebreak_col); (b) the
-    # iterative graph loops (pagerank + HITS and their consumers) moved
-    # under graph._loop_shuffle (data-derived shuffle width, AQE off
-    # inside the loop window) — values are quantized-identical by
-    # construction but the plans changed materially.
-    7: (
-        "inv_st_cusum",
-        "inv_g_pagerank", "inv_g_pagerank_seeded", "inv_g_hits",
-        "inv_t_textrank",
-        # r7: cms_heavy_hitters' estimate join factored into the shared
-        # cms_estimate_join helper (now also the streaming twin's read
-        # side) — the plan is value-identical but the impl changed after
-        # the r3 green row
-        "inv_q_cms_heavy_hitters",
-    ),
-    # round 8: greens whose implementation changed in r8 after their last
-    # driver row — (a) the versioned-store temp dirs dropped their pid tag
-    # (r7 ADVICE: pid-tagged dirs orphaned the previous run's store every
-    # invocation; the fixed per-sf path is rmtree'd at each run's start),
-    # touching every query that builds a throwaway store; (b)
-    # embedding_outliers gained an explicit ``dim`` parameter + empty-input
-    # guard (the sf wrappers now pass dim=64, skipping the inference job)
-    # and pca_power gained the empty-input guard ahead of its loop.
-    8: (
-        "inv_s_versioned_scan", "inv_s_versioned_merge",
-        "inv_s_versioned_changes", "inv_s_versioned_diff",
-        "inv_d_incremental_versioned", "inv_st_heavy_hitters",
-        "inv_st_hll_distinct",
-        "inv_v_embedding_outliers", "inv_v_pca_power",
-        # (c) hybrid_ndcg's blended-relevance block moved into the shared
-        # _hybrid_rel helper (pure code motion, plan-identical) so the
-        # three-leg grade reuses it
-        "inv_t_hybrid_ndcg",
-        # (d) HITS's loop width re-tuned to 100k rows/task (measured A/B;
-        # values are quantization-identical by construction but the plan
-        # changed materially)
-        "inv_g_hits",
-        # NOT staged: streaming.stream_events gained a directory-layout
-        # branch (scalecheck replicas stream multi-file tables); at the
-        # driver's single-file testdata layout os.path.isdir is False and
-        # the taken branch is byte-identical to the previous code, so the
-        # streaming greens' evidence is not stale — the new branch is
-        # pytest- and SCALECHECK-covered instead.
-    ),
-}
-
-# How many already-green queries are re-admitted into each round's window as a
-# rotating regression sample (r2 advice: a green query must be able to re-enter
-# the window, or a regression in it is never re-caught by the driver).
-# K=2 through round 4 so the never-checked queries drain first (48 of 69 in
-# the r4 window, the remaining 21 early in r5); from round 5 the pending set
-# no longer fills the window, so K rises to 5 and the stalest-first green
-# tail consumes the spare slots — every green row ends ≤2 rounds stale.
-# Round 8 exception (r7 verdict task #2): 66 names' newest driver evidence
-# dates to r1–r2 — more than the window's spare slots — so the stalest-first
-# green tail IS this round's regression resample (a strictly stronger one:
-# it re-checks the oldest evidence instead of a uniform draw). K drops to 0
-# for the round to hand those 5 slots to the tail; back to 5 from round 9.
-_GREEN_RESAMPLE_K = 2 if _THIS_ROUND <= 4 else (0 if _THIS_ROUND == 8 else 5)
-
-
-def _green_resample(green: list[str], rnd: int, k: int) -> list[str]:
-    """Deterministic per-round sample of green names: order by
-    md5(name:round), take k. Uniform over rounds, reproducible anywhere."""
-    import hashlib
-
-    return sorted(
-        green,
-        key=lambda n: hashlib.md5(f"{n}:{rnd}".encode()).hexdigest(),
-    )[:k]
-
-
-def _rotate_registry(reg: dict) -> dict:
-    reverify = [
-        n for n in _REVERIFY_BY_ROUND.get(_THIS_ROUND, ()) if n in reg
-    ]
-    taken = set(reverify)
-    pending = [n for n in reg if n not in _DRIVER_GREEN and n not in taken]
-    green = [n for n in reg if n in _DRIVER_GREEN and n not in taken]
-    head = [n for n in _WINDOW_LEAD_NAMES if n in pending]
-    lead = [
-        n
-        for n in pending
-        if n.startswith(_WINDOW_PRIORITY_PREFIXES) and n not in set(head)
-    ]
-    rest = [n for n in pending if n not in set(head) and n not in set(lead)]
-    sample = _green_resample(green, _THIS_ROUND, _GREEN_RESAMPLE_K)
-    # Green tail ordered stalest-first so spare window slots (once pending
-    # drains) re-verify the oldest evidence first.
-    tail = sorted(
-        (n for n in green if n not in set(sample)),
-        key=lambda n: (_GREEN_ROUNDS.get(n, 0), n),
-    )
-    return {
-        n: reg[n]
-        for n in (*reverify, *head, *lead, *sample, *rest, *tail)
-    }
-
-
-
-
-# ---------------------------------------------------------------------------
 # Round-2: driver-visible evidence for the rows-only family (r1 verdict #7).
 # inv_m_media_features gains a FULL DuckDB oracle (the mapInPandas decode
 # path emits engine-portable features); simhash / kmeans / packing get
@@ -6526,7 +6243,6 @@ _REGISTRY.update({"inv_q_distribution_drift": (q_q_distribution_drift, SQL_Q_DRI
 def q_s_bars_intraday(spark: SparkSession, sf: str) -> DataFrame:
     """Interval bars (tables.bars_from_events_interval): 4-hour OHLCV via
     F.window time bucketing — the sub-day hypertable rollup (S3 at scale)."""
-    tune_existing(spark)
     from market_data_pipeline_spark.sources.tables import bars_from_events_interval
 
     return bars_from_events_interval(spark, sf, width="4 hours")
@@ -6653,7 +6369,6 @@ def q_st_ohlcv_bars(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming OHLCV candles (jobs.streaming_ohlcv_bars): append-mode 4h
     bars; the oracle reproduces the watermark-finalization rule exactly
     (a bar emits iff its window end <= max(ts) - delay)."""
-    tune_existing(spark)
     ev = streaming_jobs.stream_events(spark, sf).select("user_id", "ts", "value")
     bars = streaming_jobs.streaming_ohlcv_bars(ev, width="4 hours", watermark="2 hours")
     return streaming_jobs.run_stream_to_memory(
@@ -6959,7 +6674,6 @@ def q_t_span_dedup(spark: SparkSession, sf: str) -> DataFrame:
     Parity anchor: the reference's dedup surface is row-level only; this
     extends it with the span-level dedup a 100 TB training pipeline runs
     (SURVEY.md LLM-ops mandate)."""
-    tune_existing(spark)
     return text.repeated_span_stats(_docs(spark, sf), n=8, min_docs=2)
 
 
@@ -7022,7 +6736,6 @@ def q_x_shard_export(spark: SparkSession, sf: str) -> DataFrame:
     because the shuffle key is pure id arithmetic."""
     from market_data_pipeline_spark.sources import sinks as _sinks
 
-    tune_existing(spark)
     assigned = _sinks.shard_assign(_docs(spark, sf), "doc_id", 8)
     return assigned.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -7055,7 +6768,6 @@ def q_t_span_excise(spark: SparkSession, sf: str) -> DataFrame:
     apply: duplicated intervals cut out of each document, unique
     surroundings kept (operators/text.py:excise_repeated_spans).
     Companion of inv_t_span_dedup (same flagging, policy applied)."""
-    tune_existing(spark)
     return text.excise_repeated_spans(_docs(spark, sf), n=8, min_docs=2)
 
 
@@ -7556,7 +7268,6 @@ e AS (
 def q_g_copurchase_edges(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     return graph.copurchase_edges(spark, sf, min_weight=2)
 
 
@@ -7569,7 +7280,6 @@ SELECT src, dst, weight FROM e WHERE weight >= 2
 def q_g_degree_hist(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     return graph.degree_histogram(graph.copurchase_edges(spark, sf))
 
 
@@ -7587,7 +7297,6 @@ SELECT degree, count(*) AS n_nodes FROM deg GROUP BY degree
 def q_g_triangles(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     return graph.triangle_stats(graph.copurchase_edges(spark, sf))
 
 
@@ -7619,7 +7328,6 @@ SELECT
 def q_g_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     pr = graph.pagerank(graph.copurchase_edges(spark, sf), iterations=10)
     return pr.orderBy(F.col("pr").desc(), F.col("node")).limit(50)
 
@@ -7658,7 +7366,6 @@ def q_g_assoc_rules(spark: SparkSession, sf: str) -> DataFrame:
     ratios with pinned division order, so the oracle matches exactly."""
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     return graph.association_rules(li, "l_orderkey", "l_partkey")
 
@@ -7692,7 +7399,6 @@ def q_g_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     cap mirrored in the oracle), full degrees, anti-join on the edge set."""
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     return graph.link_prediction(copurchase_w2(spark, sf))
 
 
@@ -7790,7 +7496,6 @@ _REGISTRY.update(
 
 
 def q_d_jaccard_prefix(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return dedup.jaccard_prefix_join(_docs(spark, sf), threshold=0.9)
 
 
@@ -7832,7 +7537,6 @@ def q_d_containment(spark: SparkSession, sf: str) -> DataFrame:
     contained side — the quote/subset detector (high containment, low
     Jaccard when the container is much longer). Prefix-filtered candidate
     generation, brute-force-equal by the completeness proof."""
-    tune_existing(spark)
     return dedup.containment_join(_docs(spark, sf), threshold=0.9)
 
 
@@ -7908,7 +7612,6 @@ _REGISTRY.update(
 def q_g_bfs_hops(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     edges = graph.copurchase_edges(spark, sf)
     seeds = (
         load_table(spark, sf, "part")
@@ -7949,7 +7652,6 @@ _REGISTRY.update({"inv_g_bfs_hops": (q_g_bfs_hops, SQL_G_BFS_HOPS)})
 def q_g_components(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     strong = graph.copurchase_edges(spark, sf, min_weight=3).select(
         F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
     )
@@ -8019,7 +7721,6 @@ _REGISTRY.update({"inv_x_temperature_mix": (q_x_temperature_mix, SQL_X_TEMPERATU
 def q_g_pagerank_seeded(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     edges = graph.copurchase_edges(spark, sf)
     seeds = (
         load_table(spark, sf, "part")
@@ -8086,7 +7787,6 @@ _REGISTRY.update(
 def q_g_modularity(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     # derive the edge list ONCE (weight >= 3 is a subset of weight >= 2)
     # and checkpoint it — the strong-tie filter and the scored graph both
     # read the materialized frame instead of re-running the lineitem scan
@@ -8234,7 +7934,6 @@ _REGISTRY.update({"inv_a_ic_momentum": (q_a_ic_momentum, SQL_A_IC)})
 
 
 def q_er_editdist_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     from market_data_pipeline_spark.operators import linkage
 
     p = load_table(spark, sf, "part")
@@ -8257,7 +7956,6 @@ _REGISTRY.update(
 
 
 def q_er_entities(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     from market_data_pipeline_spark.operators import linkage
 
     p = load_table(spark, sf, "part")
@@ -8316,7 +8014,6 @@ _REGISTRY.update({"inv_er_entities": (q_er_entities, SQL_ER_ENTITIES)})
 
 
 def q_d_lsh_recall(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     d = _docs(spark, sf).filter(F.col("source") == "src0")
     # both pair frames feed TWO consumers (the hit join and the tagged
     # union) — checkpoint them once or the multi-million-row candidate
@@ -8411,7 +8108,6 @@ _REGISTRY.update({"inv_d_lsh_recall": (q_d_lsh_recall, SQL_D_LSH_RECALL)})
 
 
 def q_t_nb_confusion(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     return text.nb_confusion(_docs(spark, sf))
 
 
@@ -8491,7 +8187,6 @@ _REGISTRY.update({"inv_t_nb_confusion": (q_t_nb_confusion, SQL_T_NB_CONFUSION)})
 def q_g_kcore(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     # k=70 sits just under the co-purchase graph's median degree (~119 at
     # both SFs): the peel cascades meaningfully (nodes whose neighborhoods
     # thin out drop in waves) yet converges to a non-trivial core within
@@ -8818,7 +8513,6 @@ _REGISTRY.update({"inv_w_rolling_corr": (q_w_rolling_corr, SQL_W_ROLLING_CORR)})
 def q_g_hits(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     li = load_table(spark, sf, "lineitem").select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
     )
@@ -9161,7 +8855,6 @@ def q_d_lsh_band_sweep(spark: SparkSession, sf: str) -> DataFrame:
     # 1.9-2.3 s, hash-identical (each job's plan is unchanged).
     from concurrent.futures import ThreadPoolExecutor
 
-    tune_existing(spark)
     d = _docs(spark, sf).filter(F.col("source") == "src0")
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_truth = pool.submit(
@@ -9306,7 +8999,6 @@ _REGISTRY.update({"inv_d_lsh_band_sweep": (q_d_lsh_band_sweep, SQL_D_LSH_BAND_SW
 
 
 def q_er_customer_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    tune_existing(spark)
     from market_data_pipeline_spark.operators import linkage
 
     c = load_table(spark, sf, "customer").filter(
@@ -11138,7 +10830,6 @@ def q_st_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
 
     from market_data_pipeline_spark.streaming import txn
 
-    tune_existing(spark)
     tag = os.path.basename(os.path.normpath(sf)) or "sf"
     # fixed per-sf path, rmtree'd here, NOT pid-tagged — see
     # q_d_incremental_versioned for the lifetime rationale (r7 ADVICE)
@@ -11180,7 +10871,6 @@ def q_st_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
 
     from market_data_pipeline_spark.streaming import txn
 
-    tune_existing(spark)
     tag = os.path.basename(os.path.normpath(sf)) or "sf"
     # fixed per-sf path, rmtree'd here, NOT pid-tagged — see
     # q_d_incremental_versioned for the lifetime rationale (r7 ADVICE)
@@ -11999,7 +11689,6 @@ _REGISTRY.update({"inv_t_unigram_ppl": (q_t_unigram_ppl, _unigram_ppl_sql())})
 def q_g_label_prop(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import graph
 
-    tune_existing(spark)
     return graph.label_propagation(
         graph.copurchase_edges(spark, sf), iterations=5
     )
@@ -12190,7 +11879,6 @@ _REGISTRY.update({"inv_t_rake": (q_t_rake, _rake_sql())})
 def q_e_markov_stationary(spark: SparkSession, sf: str) -> DataFrame:
     from market_data_pipeline_spark.operators import behavior
 
-    tune_existing(spark)
     return behavior.markov_stationary(spark, sf, iterations=8)
 
 
@@ -12313,7 +12001,6 @@ def q_st_quantile_bins(spark: SparkSession, sf: str) -> DataFrame:
 
     from market_data_pipeline_spark.streaming import txn
 
-    tune_existing(spark)
     tag = os.path.basename(os.path.normpath(sf)) or "sf"
     # fixed per-sf path, rmtree'd here — see q_d_incremental_versioned
     base = os.path.join(tempfile.gettempdir(), f"mdp_sthist_{tag}")

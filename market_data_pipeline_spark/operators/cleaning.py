@@ -11,38 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from market_data_pipeline_spark.functions.helpers import (
-    ffill,
-    keep_last_dedupe,
-    require_columns,
-    series_window,
-    snake_case_columns,
-)
-
-OHLCV_REQUIRED = ("time", "open", "high", "low", "close", "volume")
-
-
-def clean_ohlcv(df: DataFrame, required=OHLCV_REQUIRED) -> DataFrame:
-    """The reference's clean pass (data_cleaner.py:26-57): normalize names,
-    coerce numerics, drop null time, keep-last dedupe, sort, forward-fill.
-
-    Sorting is deliberately absent: order is a property of downstream windows
-    (``orderBy`` inside the WindowSpec), not of the stored table — a global
-    sort at 100 TB is a needless range-shuffle.
-    """
-    df = snake_case_columns(df)
-    require_columns(df, [c for c in required if c != "volume"] )
-    numeric = [c for c in ("open", "high", "low", "close", "volume") if c in df.columns]
-    for c in numeric:
-        df = df.withColumn(c, F.col(c).cast("double"))
-    df = df.filter(F.col("time").isNotNull())
-    if "event_id" in df.columns:
-        df = keep_last_dedupe(df, ["symbol", "time"], "event_id")
-    w = series_window()
-    for c in numeric:
-        df = df.withColumn(c, ffill(c, w))
-    return df
-
 
 def validate_symbols(df: DataFrame, symbol_col: str = "symbol", order_col: str | None = None) -> DataFrame:
     """P7 — symbol-format filter (data_validator.py:9-70): trim/upper, regex
@@ -58,18 +26,6 @@ def validate_symbols(df: DataFrame, symbol_col: str = "symbol", order_col: str |
     order = F.col(order_col) if order_col else F.monotonically_increasing_id()
     w = Window.partitionBy(symbol_col).orderBy(order)
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
-def rejected_symbols(df: DataFrame, symbol_col: str = "symbol") -> DataFrame:
-    """The validator's removed-list side output (data_validator.py:29-59):
-    the anti-filter with a reason column."""
-    norm = F.upper(F.trim(F.col(symbol_col)))
-    return (
-        df.withColumn("__norm", norm)
-        .filter(~F.col("__norm").rlike("^[A-Z0-9]{3,5}$"))
-        .withColumn("reason", F.lit("invalid_format"))
-        .drop("__norm")
-    )
 
 
 def densify_calendar(df: DataFrame, date_col: str = "d", key_cols=("symbol",), zero_fill=()) -> DataFrame:

@@ -395,15 +395,6 @@ def resize_stub(df: DataFrame, target_w: int = 224, target_h: int = 224) -> Data
     )
 
 
-def frame_sample_stub(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """STUB video frame sampling: emits (media_id, frame_no) rows for frames
-    0, n, 2n … derived from payload length — the explode-shaped plumbing a
-    real sampler uses."""
-    n_frames = (F.col("meta.n_bytes") / 100).cast("int") + 1
-    frames = F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-    return df.select("media_id", F.explode(frames).alias("frame_no"))
-
-
 def jpeg_roundtrip_stats(
     df: DataFrame,
     id_col: str = "doc_id",

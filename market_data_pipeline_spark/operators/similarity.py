@@ -63,16 +63,6 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / F.nullif(_norm(a) * _norm(b), F.lit(0.0))
 
 
-def with_unit_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Pre-normalize once so cosine becomes a plain dot product downstream —
-    the standard corpus-side preprocessing at scale."""
-    n = _norm(F.col(vec_col).cast("array<double>"))
-    return df.withColumn(
-        "unit_vec",
-        F.transform(F.col(vec_col).cast("array<double>"), lambda x: x / n),
-    )
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -1372,15 +1372,6 @@ _UNI_NEG = -1e9  # "piece not in vocab" score; true paths always exist
 #   keep single chars alive or better), so -1e9 never wins a greatest()
 
 
-def _unigram_coords(max_piece_len: int = _UNI_P, max_word_len: int = _UNI_N):
-    return [
-        (s, j)
-        for s in range(1, max_word_len + 1)
-        for j in range(1, max_piece_len + 1)
-        if s + j - 1 <= max_word_len
-    ]
-
-
 def _unigram_viterbi(words: DataFrame, pieces: DataFrame) -> DataFrame:
     """(word, cnt) × (piece, lp) → (word, cnt, __pieces, __ntok): each
     word's best segmentation under the current piece log-probs.

@@ -60,12 +60,6 @@ def top_n_by_liquidity(listing: DataFrame, n: int, value_col: str = "avg_value",
     return valued.orderBy(F.col("__v").desc(), F.col(key_col)).limit(n).drop("__v")
 
 
-def universe_semi_join(fact: DataFrame, universe: DataFrame, key: str = "symbol") -> DataFrame:
-    """J3 — restrict a fact table to the scanner universe
-    (market_scope_filter.py:127-129) as a broadcast left-semi join."""
-    return fact.join(F.broadcast(universe.select(key).distinct()), key, "left_semi")
-
-
 def status_lookup(fact: DataFrame, listing: DataFrame, key: str = "symbol", cols: Sequence[str] = ("status", "exchange")) -> DataFrame:
     """J2 — the symbol→status/exchange dict probe (market_scanner.py:280-307)
     as a broadcast hash join against the listing dimension."""

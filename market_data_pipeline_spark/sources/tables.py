@@ -16,9 +16,11 @@ same role the vnstock OHLCV endpoint plays for the reference.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -37,7 +39,22 @@ TABLES = (
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table. Columnar parquet scan: Catalyst pushes
     filters and prunes columns into this reader (check ``PushedFilters`` /
-    ``ReadSchema`` in ``.explain``).
+    ``ReadSchema`` in ``.explain``). ``events`` goes through ``read_events``.
+    """
+    if name not in TABLES:
+        raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events":
+        return read_events(spark, path)
+    return spark.read.parquet(path)
+
+
+def read_events(
+    spark: SparkSession,
+    path: str,
+    open_stream: Callable[[StructType], DataFrame] | None = None,
+) -> DataFrame:
+    """The events table at ``path`` with ``ts`` as a session TimestampType.
 
     ``events.ts`` physical type varies by testdata generation: TIMESTAMP(NANOS)
     (Spark 4 rejects it unless read as raw long — truncate to µs with integer
@@ -46,20 +63,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TIMESTAMP_NTZ — cast to the session TimestampType (session zone is pinned
     UTC, so the cast is wall-clock identical and downstream window/range code
     sees one consistent type).
+
+    ``open_stream``, given the file's read schema, returns the streaming
+    frame to normalize in place of the batch read.
     """
-    if name not in TABLES:
-        raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = df.schema["ts"].dataType.typeName()
-        if ts_type == "long":
-            return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        if ts_type == "timestamp_ntz":
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    if open_stream is not None:
+        df = open_stream(df.schema)
+    ts_type = df.schema["ts"].dataType.typeName()
+    if ts_type == "long":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -19,40 +19,37 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from market_data_pipeline_spark.sources.tables import read_events
 from market_data_pipeline_spark.streaming import txn
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet. Schema pinned (streaming
     readers never infer); pathGlobFilter scopes the directory scan to the
-    events table. The ts normalization (ns-long → µs, or NTZ → session-zone
-    timestamp) mirrors sources.load_table."""
+    events table. ``tables.read_events`` supplies the schema and the ts
+    normalization (ns-long → µs, or NTZ → session-zone timestamp)."""
     import os
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
-    batch = spark.read.parquet(path)
-    if os.path.isdir(path):
-        # multi-file table (the real-lake layout, e.g. the scalecheck
-        # replicas): stream the directory itself — a pathGlobFilter of
-        # 'events.parquet' would match no LEAF file inside it and the
-        # stream would silently be empty
-        stream = spark.readStream.schema(batch.schema).parquet(path)
-    else:
+
+    def open_stream(schema: StructType) -> DataFrame:
+        if os.path.isdir(path):
+            # multi-file table (the real-lake layout, e.g. the scalecheck
+            # replicas): stream the directory itself — a pathGlobFilter of
+            # 'events.parquet' would match no LEAF file inside it and the
+            # stream would silently be empty
+            return spark.readStream.schema(schema).parquet(path)
         # single-file testdata layout: scope the directory scan to the
         # events table by file name
-        stream = (
-            spark.readStream.schema(batch.schema)
+        return (
+            spark.readStream.schema(schema)
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    ts_type = batch.schema["ts"].dataType.typeName()
-    if ts_type == "long":
-        return stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if ts_type == "timestamp_ntz":
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+
+    return read_events(spark, path, open_stream)
 
 
 def tumbling_window_agg(events: DataFrame, width: str = "1 hour", watermark: str = "2 hours") -> DataFrame:

@@ -1,5 +1,6 @@
 """Driver-contract smoke: entry() runs, every queries() entry runs at
-sf0.001, and oracle_sql() keys are a subset of queries() keys."""
+sf0.001 on a tuned session with a scale-clean plan, queries() keeps the
+driver-window order, and oracle_sql() keys are a subset of queries() keys."""
 
 from __future__ import annotations
 
@@ -18,12 +19,79 @@ def test_oracle_keys_subset():
 
 
 def test_all_queries_run_and_match_columns(spark, sf_dir):
+    """One sweep over the registry at sf0.001: each frame is built once,
+    its physical plan audited, then executed.
+
+    Engine-wide physical-plan audit: no registered query may contain a
+    row-at-a-time Python UDF (BatchEvalPython — the 10-100× slow path; all
+    Python hops must be Arrow-vectorized), an unhinted CartesianProduct
+    (the O(n·m) shuffle killer; non-equi joins must broadcast one side), or
+    an UNPARTITIONED window over a corpus-scale frame (single-partition
+    WindowExec — the r4-verdict zipf/HITS failure class).
+
+    The global-window allowlist names ONLY queries whose windowed frame is
+    bounded by the trading CALENDAR, the listed-symbol universe (per-date
+    market aggregates, month series, one week's symbol ranking), or a
+    CLOSED CATEGORICAL domain (order statuses, language codes — the
+    share-of-total pattern over an already-aggregated O(domain) frame) —
+    never by corpus/vocabulary/graph size, which grow without bound at
+    100 TB.
+
+    Streaming queries and the iterative kmeans fit execute on build, so
+    their final plan shows nothing of the work; they skip the audit (their
+    batch components are covered elsewhere) but still run.
+    """
+    from tests.test_plan_shapes import _global_window_lines
+
+    allowed_rowwise = {"inv_s_statement_udtf"}  # the deliberate UDTF surface
+    allowed_global_window = {
+        "inv_a2_market_health",  # row_number over per-date market aggregate
+        "inv_a_mom_growth",  # lag over the O(months) revenue series
+        "inv_o6_weekly_topbottom",  # rank symbols within ONE week
+        "inv_w16_rolling_corr",  # O(trading days) aligned pair series
+        "inv_w19_regime",  # O(trading days) regime series
+        "inv_w20_market_summary",  # latest-date pick on per-date aggregate
+        "inv_w_rolling_corr",  # O(trading days) aligned pair series
+        "inv_a14_run_summary",  # share-of-total over O(statuses) aggregate
+        "inv_x_temperature_mix",  # share-of-total over O(languages) agg
+        "inv_x_neyman_alloc",  # largest-remainder rank over O(strata) agg
+        # unigram-LM trainer renormalizer (r9): share-of-total over the
+        # piece-count frame, bounded by the ALPHABET (Σ_{j≤3} 26^j =
+        # 18 278 pieces max regardless of corpus size — the same closed-
+        # domain argument that statically broadcasts the piece table)
+        "inv_t_unigram_lm",
+        "inv_t_unigram_encode",
+        "inv_t_maxmatch_encode",
+        "inv_t_unigram_ppl",
+    }
+    skipped = 0
+    audited = 0
     for name, fn in entrymod.queries().items():
         df = fn(spark, sf_dir)
         assert df.columns, name
+        if name.startswith("inv_st_") or name == "inv_v_kmeans_fit":
+            skipped += 1  # execute on build (stream run / iterative loop)
+        else:
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            audited += 1
+            if name not in allowed_rowwise:
+                assert "BatchEvalPython" not in plan, f"{name}: row-wise Python UDF"
+            assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+            if name not in allowed_global_window:
+                glines = _global_window_lines(plan)
+                assert not glines, (
+                    f"{name}: unpartitioned Window (single-partition stage): "
+                    f"{glines[0][:120]}"
+                )
         # cheap execution check (limit avoids full materialization cost here;
         # the full-result oracle comparison runs in tools/verify_local.py)
         df.limit(5).collect()
+    # the inv_st_ streaming queries (incl. the round-7 CMS heavy hitters +
+    # HLL distinct and the round-8 binned-quantile store) + the iterative
+    # kmeans_fit loop execute on build and are skipped; the bound tracks
+    # the streaming-family count loosely so a legitimate new stream entry
+    # doesn't false-alarm, while a mass-skip regression still would
+    assert audited > 140 and skipped <= 20
 
 
 def test_sql_front_door(spark, sf_dir):
@@ -137,46 +205,53 @@ def test_bench_cli_contract(tmp_path):
 
 
 def test_correctness_window_rotation():
-    """The driver checks the FIRST 50 queries() entries per round; names
-    with a clean row in any CORRECTNESS_r*.json must rotate out of that
-    window (and failed rows must stay in)."""
+    """The driver checks the FIRST 50 queries() entries per run, so the
+    order is: names with no clean row in any CORRECTNESS_r*.json, in
+    registration order, then the green names by (last clean round, name) —
+    a new correctness file moves its names to the back and the window
+    advances. The expected order is rebuilt here from the files alone."""
+    import glob
     import json
     import os
+    import re
 
-    import __spark_entry__ as m
-
-    repo = os.path.dirname(os.path.abspath(m.__file__))
-    green = set()
-    import glob
-
+    repo = os.path.dirname(os.path.abspath(entrymod.__file__))
+    last: dict[str, int] = {}
     for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", p).group(1))
         for name, row in json.load(open(p)).items():
             if isinstance(row, dict) and row.get("err") is None and not any(
                 v is False for v in row.values()
             ):
-                green.add(name)
-    window = list(m.queries())[:50]
-    overlap = green & set(window)
-    # r3 policy: green names re-enter the window ONLY as (a) this round's
-    # modified-since-green reverify list or (b) the rotating K-sample —
-    # every other slot goes to pending queries while any remain
-    allowed = set(m._REVERIFY_BY_ROUND.get(m._THIS_ROUND, ())) | set(
-        m._green_resample(
-            [n for n in m.queries() if n in green
-             and n not in m._REVERIFY_BY_ROUND.get(m._THIS_ROUND, ())],
-            m._THIS_ROUND,
-            m._GREEN_RESAMPLE_K,
-        )
-    )
-    n_pending = len(set(m.queries()) - green)
-    if n_pending >= 50:
-        stray = overlap - allowed
-        assert not stray, f"green names wasting window slots: {sorted(stray)[:5]}"
-        # and the sample must actually be IN the window (regression re-catch)
-        assert len(overlap & allowed) >= min(m._GREEN_RESAMPLE_K, len(allowed))
+                last[name] = max(last.get(name, 0), rnd)
+    registered = list(entrymod._REGISTRY)
+    pending = [n for n in registered if n not in last]
+    green = sorted((n for n in registered if n in last), key=lambda n: (last[n], n))
+    assert list(entrymod.queries()) == pending + green
+    assert list(entrymod.oracle_sql()) == [
+        n for n in pending + green if entrymod._REGISTRY[n][1] is not None
+    ]
     # registry floor: round-2 shipped 180 named queries; a silent
     # registration overwrite would show up as a drop below this
-    assert len(m.queries()) >= 180
+    assert len(entrymod.queries()) >= 180
+
+
+def test_every_query_runs_on_a_tuned_session(spark, sf_dir):
+    """queries() pins the correctness-critical confs before EVERY query,
+    including those whose body never touches the session: a driver session
+    left in another zone or with ANSI on must not leak into a result."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for name in ("inv_s7_recent_events", "inv_q_benford"):
+            spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+            spark.conf.set("spark.sql.ansi.enabled", "true")
+            entrymod.queries()[name](spark, sf_dir)
+            assert spark.conf.get("spark.sql.session.timeZone") == "UTC", name
+            assert spark.conf.get("spark.sql.ansi.enabled") == "false", name
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def test_bench_contract_names_and_baseline():
