@@ -10814,9 +10814,10 @@ _REGISTRY.update(
 # ---------------------------------------------------------------------------
 # Round 7: streaming heavy hitters (r6 verdict task 7) — the count-min-
 # backed trending-items twin of inv_q_cms_heavy_hitters. The counter table
-# is maintained by the exactly-once foreachBatch CMS store (CMS is a
-# LINEAR sketch: per-batch counter deltas sum to the batch-scan counters,
-# so the stream's final store equals the batch sketch exactly — pinned by
+# is maintained by the exactly-once foreachBatch CMS store, a tablefmt
+# table read back with tablefmt.read (CMS is a LINEAR sketch: per-batch
+# counter deltas sum to the batch-scan counters, so the stream's final
+# store equals the batch sketch exactly — pinned by
 # test_streaming_cms_maintenance_is_exact_across_batches); the heavy-hitter
 # read is the shared quality.cms_estimate_join, so the streaming twin's
 # output — and therefore its oracle — is the batch query's verbatim.
@@ -10828,7 +10829,7 @@ def q_st_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from market_data_pipeline_spark.streaming import txn
+    from market_data_pipeline_spark.sources import tablefmt as tf
 
     tag = os.path.basename(os.path.normpath(sf)) or "sf"
     # fixed per-sf path, rmtree'd here, NOT pid-tagged — see
@@ -10845,7 +10846,7 @@ def q_st_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
         depth=4,
     )
     q.awaitTermination()
-    counters = txn.read_versioned(spark, f"{base}/store")
+    counters = tf.read(spark, f"{base}/store")
     e = load_table(spark, sf, "events")
     exact = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_count"))
     return quality.cms_estimate_join(
@@ -10869,7 +10870,7 @@ def q_st_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from market_data_pipeline_spark.streaming import txn
+    from market_data_pipeline_spark.sources import tablefmt as tf
 
     tag = os.path.basename(os.path.normpath(sf)) or "sf"
     # fixed per-sf path, rmtree'd here, NOT pid-tagged — see
@@ -10885,7 +10886,7 @@ def q_st_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
         distinct_col="user_id",
     )
     q.awaitTermination()
-    sketches = txn.read_versioned(spark, f"{base}/store")
+    sketches = tf.read(spark, f"{base}/store")
     e = load_table(spark, sf, "events")
     exact = e.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_distinct")
@@ -11999,7 +12000,7 @@ def q_st_quantile_bins(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from market_data_pipeline_spark.streaming import txn
+    from market_data_pipeline_spark.sources import tablefmt as tf
 
     tag = os.path.basename(os.path.normpath(sf)) or "sf"
     # fixed per-sf path, rmtree'd here — see q_d_incremental_versioned
@@ -12019,7 +12020,7 @@ def q_st_quantile_bins(spark: SparkSession, sf: str) -> DataFrame:
         bins=_HIST_BINS,
     )
     q.awaitTermination()
-    counters = txn.read_versioned(spark, f"{base}/store")
+    counters = tf.read(spark, f"{base}/store")
     est = streaming_jobs.histogram_quantiles(
         counters, lo, hi, _HIST_BINS, qs=_HIST_QS
     )

@@ -407,7 +407,7 @@ def pack_sequences(
 
     schema = f"{id_col} long, {size_col} long, bin_id long, oversize boolean"
 
-    def pack(key, pdf: pd.DataFrame):
+    def pack(key, pdf):
         (b,) = key
         pdf = pdf.sort_values([size_col, id_col], ascending=[False, True])
         fills: list[int] = []

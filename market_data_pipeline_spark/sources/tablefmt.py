@@ -3,9 +3,10 @@ optimistic-concurrency commits, time travel, and history-preserving
 compaction — the transactional core of Delta/Iceberg-style formats without
 the format dependency.
 
-``streaming/txn.py`` solved exactly-once for a SINGLE streaming writer via
-batch-keyed dirs + markers. This module generalizes it to a multi-writer
-BATCH table:
+It is also the repo's one exactly-once streaming store: a ``foreachBatch``
+commit records ``(txn_app, txn)`` — writer identity and batch id — in its
+manifest, so a replayed batch finds its id and skips (the idempotent sink
+Structured Streaming's exactly-once guarantee rests on). The layout:
 
 - Every commit writes its data files into a fresh ``data/v{N}/`` directory
   and describes the table's full file list in ``_manifests/v{N}.json``.
@@ -50,14 +51,36 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from market_data_pipeline_spark.streaming.txn import _fs
-
 _MANIFESTS = "_manifests"
 _DATA = "data"
+
+# generation files `_txns-<uuid>.json` (the bare legacy `_txns.json` is
+# still read): vacuum publishes a NEW superset generation before deleting
+# older ones, so there is never a moment without a complete sidecar — the
+# single-file delete-then-rename scheme had a crash window where every
+# previously folded batch id became invisible and a replay re-appended
+_TXN_SIDECAR_RE = re.compile(r"^_txns(-[0-9a-f]+)?\.json$")
+
+# Writer identity for exactly-once streaming appends (Delta keys txn dedup
+# on (appId, version) for the same reason): batch ids are only meaningful
+# WITHIN one checkpoint lineage, so each lineage must write under its own
+# app or a restarted query with a fresh checkpoint — whose batch numbering
+# restarts at 0 — would collide with the previous incarnation's recorded
+# ids and silently drop never-seen data. Manifests and sidecars written
+# before apps existed read back as this default.
+_DEFAULT_TXN_APP = "stream"
 
 
 class CommitConflict(Exception):
     """Another writer committed this version first; rebase and retry."""
+
+
+def _fs(spark: SparkSession, path: str):
+    """(FileSystem, Path-constructor) for ``path``'s scheme."""
+    jvm = spark.sparkContext._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(hconf), jvm.org.apache.hadoop.fs.Path
 
 
 def _read_json(spark: SparkSession, path: str) -> dict:
@@ -94,26 +117,49 @@ def _write_json_exclusive(spark: SparkSession, path: str, doc: dict) -> None:
         raise CommitConflict(path)
 
 
-def current_version(spark: SparkSession, path: str) -> int | None:
-    """Highest committed version, or None for an empty/absent table."""
-    fs, mkpath = _fs(spark, f"{path}/{_MANIFESTS}")
-    root = mkpath(f"{path}/{_MANIFESTS}")
-    if not fs.exists(root):
-        return None
-    best = None
-    for st in fs.listStatus(root):
+def _listing(spark: SparkSession, path: str) -> tuple[list[int], list[str]]:
+    """(committed versions, txn sidecar paths), both sorted, from ONE
+    listing of ``_manifests/``. Readers open only manifests that exist:
+    vacuum leaves gaps below the oldest kept version, and a stream that
+    vacuums every batch would otherwise pay one failed open per batch it
+    ever committed."""
+    root = f"{path}/{_MANIFESTS}"
+    fs, mkpath = _fs(spark, root)
+    if not fs.exists(mkpath(root)):
+        return [], []
+    versions, sidecars = [], []
+    for st in fs.listStatus(mkpath(root)):
         name = st.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
+        if _TXN_SIDECAR_RE.match(name):
+            sidecars.append(f"{root}/{name}")
+        elif name.startswith("v") and name.endswith(".json"):
             try:
-                v = int(name[1:-5])
+                versions.append(int(name[1:-5]))
             except ValueError:
                 continue
-            best = v if best is None else max(best, v)
-    return best
+    return sorted(versions), sorted(sidecars)
+
+
+def current_version(spark: SparkSession, path: str) -> int | None:
+    """Highest committed version, or None for an empty/absent table."""
+    versions, _ = _listing(spark, path)
+    return versions[-1] if versions else None
 
 
 def _manifest(spark: SparkSession, path: str, version: int) -> dict:
     return _read_json(spark, f"{path}/{_MANIFESTS}/v{version}.json")
+
+
+def _read_listed(spark: SparkSession, path: str) -> dict | None:
+    """_read_json for a file taken from a listing, or None when a
+    concurrent vacuum deleted it since; any other read failure raises."""
+    try:
+        return _read_json(spark, path)
+    except Exception:
+        fs, mkpath = _fs(spark, path)
+        if fs.exists(mkpath(path)):
+            raise
+        return None
 
 
 def _list_parts(spark: SparkSession, data_dir: str) -> list[str]:
@@ -499,51 +545,46 @@ def _write_data(
     return new_files, _collect_stats(spark, path, new_files)
 
 
-def _append_doc(
-    spark: SparkSession,
-    path: str,
+def _doc(
+    parent_man: dict | None,
     head: int | None,
-    df: DataFrame,
+    op: str,
+    keep: list[str],
     new_files: list[str],
     new_stats: dict,
-    op: str,
-    evolve: bool,
+    schema: dict | None,
     txn: int | None = None,
     txn_app: str | None = None,
-) -> tuple[int, dict]:
-    """(version, manifest doc) for an append-shaped commit — ONE builder
-    for batch append and stream-append, so a manifest-format change lands
-    once instead of drifting between two hand-copied loops."""
+) -> dict:
+    """The one manifest builder: version ``head + 1`` listing the parent
+    files in ``keep`` (their stats carried over by metadata) plus the new
+    files, tagged with the writer's ``(txn_app, txn)`` when a streaming
+    batch commits it."""
+    parent_stats = {} if parent_man is None else parent_man.get("stats", {})
     ts = time.time()
-    if head is not None:
-        parent_man = _manifest(spark, path, head)
-        files = parent_man["files"] + new_files
-        stats = {**parent_man.get("stats", {}), **new_stats}
-        schema = _merged_schema(parent_man, df, evolve)
+    if parent_man is not None:
         # monotone commit timestamps: with clock skew across concurrent
         # writers, a child could otherwise stamp EARLIER than its parent
         # and as_of resolution would become order-dependent (Delta
         # enforces the same invariant)
         ts = max(ts, float(parent_man.get("ts") or 0.0))
-    else:
-        files = list(new_files)
-        stats = dict(new_stats)
-        schema = json.loads(df.schema.json())
-    version = 0 if head is None else head + 1
     doc = {
-        "version": version,
+        "version": 0 if head is None else head + 1,
         "parent": head,
         "op": op,
         "ts": ts,
-        "files": files,
-        "stats": stats,
+        "files": keep + new_files,
+        "stats": {
+            **{f: parent_stats[f] for f in keep if f in parent_stats},
+            **new_stats,
+        },
         "schema": schema,
     }
     if txn is not None:
         doc["txn"] = int(txn)
-        if txn_app is not None and txn_app != _DEFAULT_TXN_APP:
+        if txn_app not in (None, _DEFAULT_TXN_APP):
             doc["txn_app"] = str(txn_app)
-    return version, doc
+    return doc
 
 
 def _commit(
@@ -551,40 +592,53 @@ def _commit(
     path: str,
     df: DataFrame,
     op: str,
-    max_retries: int = 5,
     evolve: bool = False,
-) -> int:
-    """Write df's files once, then race for the next version number —
-    on conflict only the metadata step retries (data files are already
-    safely in their own directory and simply join a later manifest)."""
-    new_files, new_stats = _write_data(spark, path, df)
+    txn: int | None = None,
+    txn_app: str = _DEFAULT_TXN_APP,
+    rewrite=None,
+    max_retries: int = 5,
+) -> int | None:
+    """The one commit loop, for batch writes and every streaming sink.
 
+    Append-shaped ops (append, stream-append) and overwrite write df's
+    files once, then race for the next version number: on a lost race
+    only the metadata step retries, rebased on the new head (the data
+    files already sit in their own directory and join a later manifest).
+
+    ``rewrite(head)``, when given, commits instead whenever a table
+    exists: it plans against that head and commits through
+    _replace_files, which refuses to rebase, so a concurrent commit
+    raises CommitConflict and the loop RE-PLANS against the new head. df
+    is then only the bootstrap append of a table that does not exist yet.
+
+    ``txn`` makes the commit an exactly-once foreachBatch apply: before
+    every attempt the loop skips (returns None) if the batch id is
+    already recorded under ``txn_app`` — a crash replay, or a replay
+    racing this attempt, that already landed. Returns the committed
+    version. Bounded: a rename that keeps failing for a non-conflict
+    reason (permissions, quota, FS quirk) must fail loudly, not spin."""
+    written = None
     for _ in range(max_retries):
+        if txn is not None and txn in committed_batches(spark, path, txn_app):
+            return None
         head = current_version(spark, path)
-        if op == "append":
-            version, doc = _append_doc(
-                spark, path, head, df, new_files, new_stats, op, evolve
-            )
-        else:
-            version = 0 if head is None else head + 1
-            ts = time.time()
-            if head is not None:
-                # same monotone-ts invariant as _append_doc
-                ts = max(ts, float(_manifest(spark, path, head).get("ts") or 0.0))
-            doc = {
-                "version": version,
-                "parent": head,
-                "op": op,
-                "ts": ts,
-                "files": list(new_files),
-                "stats": dict(new_stats),
-                "schema": json.loads(df.schema.json()),
-            }
         try:
-            _write_json_exclusive(spark, f"{path}/{_MANIFESTS}/v{version}.json", doc)
-            return version
+            if rewrite is not None and head is not None:
+                return rewrite(head)
+            if written is None:
+                written = _write_data(spark, path, df)
+            parent = None if head is None else _manifest(spark, path, head)
+            if op == "overwrite" or parent is None:
+                keep, schema = [], json.loads(df.schema.json())
+            else:
+                keep, schema = parent["files"], _merged_schema(parent, df, evolve)
+            doc = _doc(parent, head, op, keep, *written, schema, txn, txn_app)
+            _write_json_exclusive(
+                spark, f"{path}/{_MANIFESTS}/v{doc['version']}.json", doc
+            )
+            return doc["version"]
         except CommitConflict:
-            continue  # another writer claimed this version; rebase on new head
+            continue
     raise CommitConflict(f"gave up after {max_retries} retries at {path}")
 
 
@@ -948,15 +1002,11 @@ def read_changes(
 
 def history(spark: SparkSession, path: str) -> list[dict]:
     """All manifests oldest-first: (version, parent, op, n_files)."""
-    head = current_version(spark, path)
-    if head is None:
-        return []
     out = []
-    for v in range(head + 1):
-        try:
-            m = _manifest(spark, path, v)
-        except Exception:
-            continue  # version number skipped by a conflict loser
+    for v in _listing(spark, path)[0]:
+        m = _read_listed(spark, f"{path}/{_MANIFESTS}/v{v}.json")
+        if m is None:
+            continue
         out.append(
             {
                 "version": m["version"],
@@ -992,7 +1042,6 @@ def _replace_files(
     untouched: list[str],
     new_df: DataFrame | None,
     op: str,
-    max_retries: int = 5,
     parent_man: dict | None = None,
     txn: int | None = None,
     txn_app: str | None = None,
@@ -1002,8 +1051,10 @@ def _replace_files(
     carry-over, their stats copied from the parent manifest) and replaces
     the rest with ``new_df``'s files. Any op that plans against a specific
     head (delete/merge/compact/cluster) is invalidated by a concurrent
-    commit, so unlike append we must NOT silently rebase — raise and let
-    the caller re-run the whole operation against the new head
+    commit, so unlike append we must NOT silently rebase: the manifest
+    rename claims ``v{expected_head + 1}``, which any commit since
+    ``expected_head`` already holds, so the loser raises CommitConflict
+    and the caller re-runs the whole operation against the new head
     (serializable isolation, the choice production formats make for
     row-rewriting ops). Callers that already read the parent manifest pass
     it via ``parent_man`` to avoid a redundant storage round trip."""
@@ -1013,43 +1064,18 @@ def _replace_files(
         new_files, new_stats = _write_data(spark, path, new_df, sized=sized)
     if parent_man is None:
         parent_man = _manifest(spark, path, expected_head)
-    parent_stats = parent_man.get("stats", {})
-    doc = {
-        "version": expected_head + 1,
-        "parent": expected_head,
-        "op": op,
-        # monotone vs parent — see _append_doc
-        "ts": max(time.time(), float(parent_man.get("ts") or 0.0)),
-        "files": untouched + new_files,
-        "stats": {
-            **{f: parent_stats[f] for f in untouched if f in parent_stats},
-            **new_stats,
-        },
-        # DML rewrites rows, never the table SHAPE — the parent's recorded
-        # schema must carry forward, or a post-delete read would fall back
-        # to parquet-footer inference and could drop an evolved column
-        # whose null-filled files don't physically store it
-        "schema": parent_man.get("schema"),
-    }
-    if txn is not None:
-        doc["txn"] = int(txn)
-        if txn_app is not None and txn_app != _DEFAULT_TXN_APP:
-            doc["txn_app"] = str(txn_app)
-    for _ in range(max_retries):
-        head = current_version(spark, path)
-        if head != expected_head:
-            raise CommitConflict(
-                f"{op} planned against v{expected_head} but head is v{head}; "
-                "re-run the operation"
-            )
-        try:
-            _write_json_exclusive(
-                spark, f"{path}/{_MANIFESTS}/v{expected_head + 1}.json", doc
-            )
-            return expected_head + 1
-        except CommitConflict:
-            continue  # loop re-reads head: a foreign commit raises above
-    raise CommitConflict(f"gave up after {max_retries} retries at {path}")
+    # DML rewrites rows, never the table SHAPE — the parent's recorded
+    # schema must carry forward, or a post-delete read would fall back
+    # to parquet-footer inference and could drop an evolved column
+    # whose null-filled files don't physically store it
+    doc = _doc(
+        parent_man, expected_head, op, untouched, new_files, new_stats,
+        parent_man.get("schema"), txn, txn_app,
+    )
+    _write_json_exclusive(
+        spark, f"{path}/{_MANIFESTS}/v{expected_head + 1}.json", doc
+    )
+    return expected_head + 1
 
 
 def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
@@ -1229,56 +1255,38 @@ def cluster(
     return _replace_files(spark, path, head, [], clustered, "cluster", sized=False)
 
 
-# generation files `_txns-<uuid>.json` (the bare legacy `_txns.json` is
-# still read): vacuum publishes a NEW superset generation before deleting
-# older ones, so there is never a moment without a complete sidecar — the
-# single-file delete-then-rename scheme had a crash window where every
-# previously folded batch id became invisible and a replay re-appended
-_TXN_SIDECAR_RE = re.compile(r"^_txns(-[0-9a-f]+)?\.json$")
-
-# Writer identity for exactly-once streaming appends (Delta keys txn dedup
-# on (appId, version) for the same reason): batch ids are only meaningful
-# WITHIN one checkpoint lineage, so each lineage must write under its own
-# app or a restarted query with a fresh checkpoint — whose batch numbering
-# restarts at 0 — would collide with the previous incarnation's recorded
-# ids and silently drop never-seen data. Manifests and sidecars written
-# before apps existed read back as this default.
-_DEFAULT_TXN_APP = "stream"
-
-
 def _sidecar_paths(spark: SparkSession, path: str) -> list[str]:
-    fs, mkpath = _fs(spark, f"{path}/{_MANIFESTS}")
-    root = mkpath(f"{path}/{_MANIFESTS}")
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if _TXN_SIDECAR_RE.match(name):
-            out.append(f"{path}/{_MANIFESTS}/{name}")
-    return sorted(out)
+    return _listing(spark, path)[1]
 
 
-def _sidecar_apps(spark: SparkSession, path: str) -> dict[str, set[int]]:
+def _sidecar_apps(
+    spark: SparkSession, path: str, sidecars: list[str] | None = None
+) -> dict[str, set[int]]:
     """Per-app batch ids whose manifests were vacuumed away: vacuum folds
     each dropped manifest's (txn_app, txn) into a sidecar generation so
     the exactly-once dedup horizon survives history retirement (Delta
     keeps txn app versions in snapshot state for the same reason). All
     extant generations are unioned — every one is a superset of its
     elders, so a crash that leaves several behind only costs redundant
-    reads. Legacy sidecars carry a bare "txns" list, read back as the
+    reads. A generation deleted since ``sidecars`` was listed was
+    superseded by a newer one, so the union starts again from a fresh
+    listing. Legacy sidecars carry a bare "txns" list, read back as the
     default app."""
-    out: dict[str, set[int]] = {}
-    for p in _sidecar_paths(spark, path):
-        try:
-            doc = _read_json(spark, p)
-        except Exception:
-            continue
-        for t in doc.get("txns", []):
-            out.setdefault(_DEFAULT_TXN_APP, set()).add(int(t))
-        for app, ids in doc.get("apps", {}).items():
-            out.setdefault(str(app), set()).update(int(t) for t in ids)
-    return out
+    while True:
+        if sidecars is None:
+            sidecars = _listing(spark, path)[1]
+        out: dict[str, set[int]] = {}
+        for p in sidecars:
+            doc = _read_listed(spark, p)
+            if doc is None:
+                break
+            for t in doc.get("txns", []):
+                out.setdefault(_DEFAULT_TXN_APP, set()).add(int(t))
+            for app, ids in doc.get("apps", {}).items():
+                out.setdefault(str(app), set()).update(int(t) for t in ids)
+        else:
+            return out
+        sidecars = None
 
 
 def committed_batches(
@@ -1287,20 +1295,21 @@ def committed_batches(
     """Streaming batch ids already recorded under ``app`` in some
     manifest's txn field, plus ids preserved in the vacuum sidecar for
     retired manifests. Ids are scoped per writer identity — see
-    _DEFAULT_TXN_APP for why."""
-    out: set[int] = set(_sidecar_apps(spark, path).get(app, set()))
-    head = current_version(spark, path)
-    if head is None:
-        return out
-    for v in range(head + 1):
-        try:
-            m = _manifest(spark, path, v)
-        except Exception:
-            continue
-        txn = m.get("txn")
-        if txn is not None and m.get("txn_app", _DEFAULT_TXN_APP) == app:
-            out.add(int(txn))
-    return out
+    _DEFAULT_TXN_APP for why. One listing; only the files it names are
+    opened, so the cost tracks the retained history, not every batch the
+    stream ever committed. Sidecars are read AFTER the manifests: vacuum
+    publishes a dropped manifest's id in a new generation before deleting
+    the manifest, so a manifest gone since the listing means its id is in
+    a generation a fresh listing will show."""
+    versions, sidecars = _listing(spark, path)
+    out: set[int] = set()
+    for v in versions:
+        m = _read_listed(spark, f"{path}/{_MANIFESTS}/v{v}.json")
+        if m is None:
+            sidecars = None
+        elif m.get("txn") is not None and m.get("txn_app", _DEFAULT_TXN_APP) == app:
+            out.add(int(m["txn"]))
+    return out | _sidecar_apps(spark, path, sidecars).get(app, set())
 
 
 def streaming_sink(path: str, app: str = _DEFAULT_TXN_APP):
@@ -1309,39 +1318,52 @@ def streaming_sink(path: str, app: str = _DEFAULT_TXN_APP):
     at-least-once; idempotence comes from recording the batch id in the
     committed manifest (Delta's txn-version trick): a replayed batch finds
     its id in the log and skips, a batch that crashed pre-commit left only
-    an invisible data directory and re-runs cleanly. Unlike the marker
-    stores in streaming/txn.py, the result is a versioned TABLE — batch
-    history is time-travelable and concurrent batch writers (e.g. a
-    backfill job beside the stream) serialize through the same commit
-    protocol."""
+    an invisible data directory and re-runs cleanly. Batch history is
+    time-travelable and concurrent batch writers (e.g. a backfill job
+    beside the stream) serialize through the same commit protocol."""
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        # evolve=False — streams are strict: a drifted batch schema must
+        # fail the micro-batch loudly, never silently evolve
+        _commit(
+            batch_df.sparkSession, path, batch_df, "stream-append",
+            txn=batch_id, txn_app=app,
+        )
+
+    return write
+
+
+def streaming_aggregate_sink(
+    path: str, keys: list[str], aggs, app: str = _DEFAULT_TXN_APP
+):
+    """``foreachBatch`` sink for a MERGEABLE aggregate table (count-min
+    counters, histogram counts, HLL registers — any aggregate whose
+    partials re-aggregate exactly): each batch frame is the batch's
+    partial aggregate by ``keys``; it is unioned with the head snapshot,
+    re-aggregated with ``aggs()`` and committed EXACTLY ONCE as a rewrite
+    of that head (op=merge, carrying the batch's txn) — a replayed batch
+    skips, so a counter never double-counts. Serializable like
+    streaming_merge_sink: a concurrent commit re-plans against the new
+    head. The first batch bootstraps the table as a stream-append of its
+    partial."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if batch_id in committed_batches(spark, path, app):
-            return
-        new_files, new_stats = _write_data(spark, path, batch_df)
-        # bounded like _commit: a rename that fails for a non-conflict
-        # reason (permissions, quota, FS quirk) must fail the micro-batch
-        # loudly, not spin the stream forever
-        for _ in range(5):
-            head = current_version(spark, path)
-            # evolve=False — streams are strict: a drifted batch schema
-            # must fail the micro-batch loudly, never silently evolve
-            version, doc = _append_doc(
-                spark, path, head, batch_df, new_files, new_stats,
-                "stream-append", evolve=False, txn=batch_id, txn_app=app,
+
+        def rewrite(head: int) -> int:
+            merged = (
+                read(spark, path, head)
+                .unionByName(batch_df)
+                .groupBy(*keys)
+                .agg(*aggs())
             )
-            try:
-                _write_json_exclusive(
-                    spark, f"{path}/{_MANIFESTS}/v{version}.json", doc
-                )
-                return
-            except CommitConflict:
-                if batch_id in committed_batches(spark, path, app):
-                    return  # someone (a replay racing us) already landed it
-                continue
-        raise CommitConflict(
-            f"gave up committing batch {batch_id} after 5 retries at {path}"
+            return _replace_files(
+                spark, path, head, [], merged, "merge", txn=batch_id, txn_app=app
+            )
+
+        _commit(
+            spark, path, batch_df, "stream-append",
+            txn=batch_id, txn_app=app, rewrite=rewrite,
         )
 
     return write
@@ -1364,8 +1386,8 @@ def streaming_merge_sink(
 
     Unlike append, a merge plans against a specific head (serializable —
     _replace_files refuses to rebase), so a concurrent commit raises
-    CommitConflict and the loop RE-PLANS the whole merge against the new
-    head, re-checking the batch-id dedup first. First-ever batch
+    CommitConflict and _commit's loop RE-PLANS the whole merge against the
+    new head, re-checking the batch-id dedup first. First-ever batch
     bootstraps the table as a plain exactly-once stream-append.
 
     With ``op_col``, the batch is a CDC change set: rows whose op equals
@@ -1387,25 +1409,11 @@ def streaming_merge_sink(
             dels = batch_df.filter(F.col(op_col) == delete_op).select(*keys)
         else:
             ups, dels = batch_df, None
-        for _ in range(5):
-            if batch_id in committed_batches(spark, path, app):
-                return
-            try:
-                merge_upsert(
-                    spark, path, ups, keys, txn=batch_id, txn_app=app,
-                    deletes=dels,
-                )
-                return
-            except FileNotFoundError:
-                # no table yet: bootstrap via the append sink (itself
-                # txn-deduped, so a race with another bootstrapper is safe);
-                # tombstones for a table that does not exist are no-ops
-                streaming_sink(path, app=app)(ups, batch_id)
-                return
-            except CommitConflict:
-                continue  # a foreign commit moved the head; re-plan
-        raise CommitConflict(
-            f"gave up merging batch {batch_id} after 5 retries at {path}"
+        _commit(
+            spark, path, ups, "stream-append", txn=batch_id, txn_app=app,
+            rewrite=lambda _head: merge_upsert(
+                spark, path, ups, keys, txn=batch_id, txn_app=app, deletes=dels
+            ),
         )
 
     return write
@@ -1424,19 +1432,15 @@ def vacuum(spark: SparkSession, path: str, keep_last: int = 2) -> int:
     vacuumed batch id must still be deduplicated."""
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    head = current_version(spark, path)
-    if head is None:
-        return 0
-    versions = [h["version"] for h in history(spark, path)]
-    keep = set(versions[-keep_last:])
-    drop = [v for v in versions if v not in keep]
+    versions, sidecars = _listing(spark, path)
+    keep, drop = versions[-keep_last:], versions[:-keep_last]
     if not drop:
         return 0
     referenced: set[str] = set()
     for v in keep:
         referenced.update(_manifest(spark, path, v)["files"])
     doomed: set[str] = set()
-    dropped_apps: dict[str, set[int]] = _sidecar_apps(spark, path)
+    dropped_apps: dict[str, set[int]] = _sidecar_apps(spark, path, sidecars)
     for v in drop:
         m = _manifest(spark, path, v)
         doomed.update(f for f in m["files"] if f not in referenced)
@@ -1454,7 +1458,6 @@ def vacuum(spark: SparkSession, path: str, keep_last: int = 2) -> int:
         # look uncommitted to a foreachBatch replay
         import uuid
 
-        old_sidecars = _sidecar_paths(spark, path)
         new_sidecar = (
             f"{path}/{_MANIFESTS}/_txns-{uuid.uuid4().hex[:12]}.json"
         )
@@ -1470,7 +1473,7 @@ def vacuum(spark: SparkSession, path: str, keep_last: int = 2) -> int:
                 },
             },
         )
-        for p in old_sidecars:
+        for p in sidecars:
             fs.delete(mkpath(p), False)
     for v in drop:
         fs.delete(mkpath(f"{path}/{_MANIFESTS}/v{v}.json"), False)

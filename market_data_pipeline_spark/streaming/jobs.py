@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from market_data_pipeline_spark.sources import tablefmt as _tf
 from market_data_pipeline_spark.sources.tables import read_events
-from market_data_pipeline_spark.streaming import txn
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,82 +264,6 @@ def stream_stream_attribution(
     )
 
 
-def streaming_dedup_admission(
-    stream_docs: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 12,
-    bands: int = 4,
-    shingle_n: int = 3,
-    threshold: float = 0.05,
-    trigger_available_now: bool = True,
-):
-    """Continuous corpus admission — the streaming twin of
-    ``dedup.incremental_dedup``: every micro-batch is deduplicated WITHIN
-    the batch (exact, keep lowest id) and AGAINST the accumulated store
-    (exact anti join + MinHash-band near-dup with Jaccard verification),
-    and only fresh documents append to the store. Per-batch cost scales
-    with the BATCH, never the corpus — the store's own pairs are never
-    recomputed (operators/dedup.py:367 contract).
-
-    ``foreachBatch`` is the right tool because the store is both input and
-    sink of the same batch — no pure streaming operator can express the
-    read-your-own-writes admission loop. Admission is EXACTLY-ONCE on
-    plain parquet: each batch's survivors land in their own
-    ``batch=<id>`` directory published by an atomic ``_COMMIT.<id>``
-    marker (streaming/txn.py), so a foreachBatch replay after a crash
-    overwrites-or-skips instead of appending duplicates, and readers
-    never see a half-written attempt. Read the store with
-    ``txn.read_appended``.
-
-    Returns the started StreamingQuery (caller awaits termination).
-    """
-    from market_data_pipeline_spark.operators import dedup as _dedup
-    from market_data_pipeline_spark.operators.text import normalized
-
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if txn.is_committed(spark, store_path, batch_id):
-            return  # replayed batch — already applied
-        # in-batch exact dedupe: keep the lowest id per normalized text
-        w = Window.partitionBy(F.md5(normalized(F.col(text_col)))).orderBy(id_col)
-        batch = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        store = txn.read_appended(spark, store_path)
-        if store is not None:
-            kept_ids = _dedup.incremental_dedup(
-                batch.select(id_col, text_col),
-                store.select(id_col, text_col),
-                text_col=text_col,
-                id_col=id_col,
-                num_hashes=num_hashes,
-                bands=bands,
-                shingle_n=shingle_n,
-                threshold=threshold,
-            ).select(id_col)
-            kept = batch.join(kept_ids, id_col, "semi")
-        else:
-            kept = batch
-        kept.write.mode("overwrite").parquet(
-            txn.data_dir(store_path, "batch=", batch_id)
-        )
-        txn.mark_committed(spark, store_path, batch_id)
-
-    writer = stream_docs.writeStream.foreachBatch(admit).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def streaming_ohlcv_bars(
     events: DataFrame, width: str = "4 hours", watermark: str = "2 hours"
 ) -> DataFrame:
@@ -377,6 +301,47 @@ def streaming_ohlcv_bars(
     )
 
 
+def _start_foreach(
+    stream: DataFrame, fn, checkpoint: str, trigger_available_now: bool
+):
+    """Start ``stream`` into the ``foreachBatch`` function ``fn`` under
+    ``checkpoint`` (availableNow unless told otherwise); returns the
+    started StreamingQuery (caller awaits termination)."""
+    writer = stream.writeStream.foreachBatch(fn).option(
+        "checkpointLocation", checkpoint
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _writer_app(checkpoint: str, prefix: str, app: str | None = None):
+    """Writer identity under which a foreachBatch table sink records its
+    batch ids: ``app`` when given, else ``prefix`` plus the streaming
+    query id PERSISTED IN THE CHECKPOINT (``<checkpoint>/metadata``, which
+    StreamExecution writes before the first batch runs), read once at the
+    first batch. Returns a ``spark -> app`` resolver.
+
+    The query id is stable across restarts of one checkpoint lineage, so
+    a crash replay (same batch id, same query) skips. It is REGENERATED
+    when a checkpoint is deleted and recreated at the same path — exactly
+    the event that restarts batch numbering at 0 — so the new
+    incarnation's batch 0 (possibly carrying never-seen data) can never
+    collide with the old incarnation's recorded id (Delta keys txn dedup
+    on (appId, version) for the same reason; a path-hash identity would
+    silently drop that batch). A fresh checkpoint is therefore a new
+    writer for every sink whose identity comes from here."""
+    cell = [app]
+
+    def resolve(spark: SparkSession) -> str:
+        if cell[0] is None:
+            qid = spark.read.json(checkpoint.rstrip("/") + "/metadata").head()["id"]
+            cell[0] = prefix + qid
+        return cell[0]
+
+    return resolve
+
+
 def _sketch_maintenance(
     stream_df: DataFrame,
     store_path: str,
@@ -386,46 +351,35 @@ def _sketch_maintenance(
     merge_exprs,
     trigger_available_now: bool = True,
 ):
-    """Shared foreachBatch read-modify-write scaffold for MERGEABLE sketch
-    stores (CMS counters, HLL registers, any linear/idempotent-union
-    sketch): per micro-batch, ``delta_fn(batch_df)`` builds the batch's
-    sketch table; if a committed version exists, union + re-aggregate
-    with ``merge_exprs`` over ``merge_keys``.
+    """Shared foreachBatch scaffold for MERGEABLE sketch stores (CMS
+    counters, HLL registers, histogram counts — any linear or
+    idempotent-union sketch): per micro-batch, ``delta_fn(batch_df)``
+    builds the batch's sketch table and ``tablefmt.streaming_aggregate_sink``
+    folds it into the store — union with the head, re-aggregate with
+    ``merge_exprs`` over ``merge_keys``, commit as a rewrite of that head.
 
-    EXACTLY-ONCE on plain parquet: each merge result is written to its
-    own ``v=<batch_id>`` directory and published by an atomic
-    ``_COMMIT.<id>`` marker (streaming/txn.py) — a replayed batch either
-    overwrites its own attempt or skips on the marker, so a CMS counter
-    can never double-count a crash-replayed batch. Reading the previous
-    version and writing the next are different directories, which also
-    removes the read-then-overwrite materialization hazard. Old versions
-    are GC'd down to the newest two. Read the store with
-    ``txn.read_versioned``."""
+    EXACTLY-ONCE through the versioned table's manifest txn: the commit
+    records the batch id under this checkpoint's writer identity
+    (_writer_app), so a crash replay of a batch skips and a CMS counter
+    never double-counts. A fresh checkpoint is a NEW writer, as it is for
+    the table sinks: pointed at an existing store it applies every batch
+    it reads, so feed one store from one checkpoint lineage (the marker
+    store this replaced skipped any batch id the old lineage had used,
+    silently dropping whatever new data it carried). History is vacuumed
+    to the newest two versions after every batch. Read the store with
+    ``tablefmt.read``."""
+    app = _writer_app(checkpoint, "sketch-")
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        if txn.is_committed(spark, store_path, batch_id):
-            return  # replayed batch — already applied
-        delta = delta_fn(batch_df)
-        prev = txn.read_versioned(spark, store_path)
-        if prev is not None:
-            merged = prev.unionByName(delta).groupBy(*merge_keys).agg(*merge_exprs())
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(
-            txn.data_dir(store_path, "v=", batch_id)
-        )
-        txn.mark_committed(spark, store_path, batch_id)
-        txn.gc_versions(spark, store_path, keep_last=2)
+        _tf.streaming_aggregate_sink(
+            store_path, merge_keys, merge_exprs, app=app(spark)
+        )(delta_fn(batch_df), batch_id)
+        _tf.vacuum(spark, store_path, keep_last=2)
 
-    writer = stream_df.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach(stream_df, merge, checkpoint, trigger_available_now)
 
 
 def streaming_cms_maintenance(
@@ -446,6 +400,10 @@ def streaming_cms_maintenance(
     counters — so batch-wise maintenance is EXACT: after any number of
     batches the store equals the sketch of all events ever seen, and
     heavy-hitter queries read width·depth rows regardless of history size.
+
+    The store is a ``tablefmt`` table (read it with ``tablefmt.read``),
+    exactly-once per checkpoint lineage: a fresh checkpoint is a NEW
+    writer and re-applies every batch it reads (see _sketch_maintenance).
     """
     from market_data_pipeline_spark.operators.quality import cms_counters
 
@@ -479,7 +437,8 @@ def streaming_hll_maintenance(
     batches the store answers "distinct users per key, ever" in O(keys ·
     sketch_size) with NO rescan of history. The streaming twin of
     ``quality.sketch_rollup_distinct`` (its rollup-by-union property, kept
-    hot as data arrives).
+    hot as data arrives). Store, exactly-once and fresh-checkpoint
+    contract as ``streaming_cms_maintenance``.
     """
     return _sketch_maintenance(
         stream_df,
@@ -562,7 +521,6 @@ def streaming_jsonl_ingest(
     parser health. Returns the started StreamingQuery.
     """
     from market_data_pipeline_spark.sources import sinks as _sinks
-    from market_data_pipeline_spark.sources import tablefmt as _tf
 
     stream = (
         spark.readStream.format("text")
@@ -579,12 +537,7 @@ def streaming_jsonl_ingest(
         if not bad.isEmpty():
             bad_sink(bad, batch_id)
 
-    writer = stream.writeStream.foreachBatch(write).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach(stream, write, checkpoint, trigger_available_now)
 
 
 def streaming_dedup_admission_table(
@@ -600,50 +553,43 @@ def streaming_dedup_admission_table(
     trigger_available_now: bool = True,
     app: str | None = None,
 ):
-    """``streaming_dedup_admission`` with the VERSIONED TABLE as the
-    store: the admission loop is identical (in-batch exact dedupe, exact
-    + MinHash-band admission against the accumulated corpus), but
-    survivors append through ``tablefmt``'s manifest-txn commit instead
-    of marker-file parquet dirs. What that buys at 100 TB: admission
-    history is time-travelable (which batch admitted which docs is a
-    version diff / ``read_changes`` call), a backfill job can write
-    BESIDE the live stream and serialize through the same optimistic
-    commit protocol, and vacuum retires old snapshots without forgetting
-    batch ids (the txn sidecar). Exactly-once comes from the manifest
-    (txn_app, txn) pair — a replayed batch finds its id recorded under
-    this query's writer identity and skips. The identity defaults to the
-    streaming query id PERSISTED IN THE CHECKPOINT (`<checkpoint>/
-    metadata`, resolved lazily at the first batch): it is stable across
-    restarts of the same checkpoint lineage but REGENERATED when a
-    checkpoint is deleted and recreated at the same path — exactly the
-    event that restarts batch numbering at 0, so the new incarnation's
-    batch 0 (possibly carrying never-seen docs) can never collide with
-    the old incarnation's recorded id (Delta keys txn dedup on
-    (appId, version) for the same reason; a path-hash identity would
-    silently drop that batch). Pass an explicit ``app`` only for
-    backfill writers that must SHARE an identity across checkpoints —
-    and then an in-place checkpoint reset requires a new ``app``.
-    Re-admission of already-stored documents under a new identity is
-    prevented by the admission CONTENT checks themselves, at the cost
-    of re-running them.
+    """Continuous corpus admission — the streaming twin of
+    ``dedup.incremental_dedup``: every micro-batch is deduplicated WITHIN
+    the batch (exact, keep lowest id) and AGAINST the accumulated corpus
+    table (exact anti join + MinHash-band near-dup with Jaccard
+    verification), and only fresh documents append to the table.
+    Per-batch cost scales with the BATCH, never the corpus — the corpus's
+    own pairs are never recomputed (operators/dedup.py:367 contract).
+    ``foreachBatch`` is the right tool because the table is both input
+    and sink of the same batch — no pure streaming operator can express
+    the read-your-own-writes admission loop.
+
+    Survivors append through ``tablefmt``'s manifest-txn commit. What
+    that buys at 100 TB: admission history is time-travelable (which
+    batch admitted which docs is a version diff / ``read_changes`` call),
+    a backfill job can write BESIDE the live stream and serialize through
+    the same optimistic commit protocol, and vacuum retires old snapshots
+    without forgetting batch ids (the txn sidecar). Exactly-once comes
+    from the manifest (txn_app, txn) pair — a replayed batch finds its id
+    recorded under this query's writer identity (_writer_app: the query
+    id persisted in the checkpoint) and skips. Pass an explicit ``app``
+    only for backfill writers that must SHARE an identity across
+    checkpoints — and then an in-place checkpoint reset requires a new
+    ``app``. Re-admission of already-stored documents under a new
+    identity is prevented by the admission CONTENT checks themselves, at
+    the cost of re-running them.
 
     Returns the started StreamingQuery (caller awaits termination)."""
     from market_data_pipeline_spark.operators import dedup as _dedup
     from market_data_pipeline_spark.operators.text import normalized
-    from market_data_pipeline_spark.sources import tablefmt as _tf
 
-    app_cell = [app]
+    writer_app = _writer_app(checkpoint, "admit-", app)
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        if app_cell[0] is None:
-            # StreamExecution writes <checkpoint>/metadata ({"id": uuid})
-            # before the first batch runs, so this always resolves here.
-            qid = spark.read.json(checkpoint.rstrip("/") + "/metadata").head()["id"]
-            app_cell[0] = "admit-" + qid
-        app = app_cell[0]
+        app = writer_app(spark)
         # ONE manifest-log scan per batch here (the sink re-checks at
         # commit time for concurrency safety — that second scan is the
         # protocol's cost, bounded because vacuum keeps the manifest
@@ -680,12 +626,7 @@ def streaming_dedup_admission_table(
         # so a same-lineage replay skips the admission work
         _tf.streaming_sink(table_path, app=app)(kept, batch_id)
 
-    writer = stream_docs.writeStream.foreachBatch(admit).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach(stream_docs, admit, checkpoint, trigger_available_now)
 
 
 def streaming_latest_state_table(
@@ -714,14 +655,14 @@ def streaming_latest_state_table(
     history stays time-travelable version by version.
 
     The writer identity defaults to the streaming query id PERSISTED IN
-    THE CHECKPOINT (same contract as ``streaming_dedup_admission_table``):
-    deleting and recreating the checkpoint restarts batch numbering at 0
-    AND regenerates the identity, so the new lineage's batch 0 can never
-    collide with the old lineage's recorded txn ids — and two latest-state
-    streams with different checkpoints writing one table never share an
-    identity. Pass an explicit ``app`` only to SHARE identity across
-    checkpoints (a coordinated backfill), accepting that an in-place
-    checkpoint reset then requires a new ``app``.
+    THE CHECKPOINT (_writer_app): deleting and recreating the checkpoint
+    restarts batch numbering at 0 AND regenerates the identity, so the new
+    lineage's batch 0 can never collide with the old lineage's recorded
+    txn ids — and two latest-state streams with different checkpoints
+    writing one table never share an identity. Pass an explicit ``app``
+    only to SHARE identity across checkpoints (a coordinated backfill),
+    accepting that an in-place checkpoint reset then requires a new
+    ``app``.
 
     With ``op_col``, the stream is a CDC CHANGE FEED: rows whose op
     equals ``delete_op`` are tombstones. Per key the batch still reduces
@@ -734,33 +675,24 @@ def streaming_latest_state_table(
     wins), matching a serial apply.
 
     Returns the started StreamingQuery (caller awaits termination)."""
-    from market_data_pipeline_spark.sources import tablefmt as _tf
-
-    app_cell = [app]
+    writer_app = _writer_app(checkpoint, "latest-", app)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        if app_cell[0] is None:
-            # StreamExecution writes <checkpoint>/metadata ({"id": uuid})
-            # before the first batch runs, so this always resolves here.
-            qid = spark.read.json(checkpoint.rstrip("/") + "/metadata").head()["id"]
-            app_cell[0] = "latest-" + qid
         payload = [c for c in batch_df.columns if c not in keys]
         latest = batch_df.groupBy(*keys).agg(
             *[F.max_by(c, time_col).alias(c) for c in payload]
         )
         _tf.streaming_merge_sink(
-            table_path, keys, app=app_cell[0], op_col=op_col, delete_op=delete_op
+            table_path,
+            keys,
+            app=writer_app(batch_df.sparkSession),
+            op_col=op_col,
+            delete_op=delete_op,
         )(latest, batch_id)
 
-    writer = stream.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach(stream, apply, checkpoint, trigger_available_now)
 
 
 def histogram_counters(df: DataFrame, value_col: str, lo: float, hi: float, bins: int) -> DataFrame:
@@ -819,8 +751,9 @@ def streaming_histogram_maintenance(
     histograms with different edges is meaningless) — derive them from
     table stats (manifest min/max) or a prior profiling pass; values
     outside clamp into the edge bins, so a drifting tail degrades
-    accuracy at the edges instead of corrupting the store. Same
-    exactly-once foreachBatch scaffold as the CMS/HLL stores."""
+    accuracy at the edges instead of corrupting the store. Store,
+    exactly-once and fresh-checkpoint contract as
+    ``streaming_cms_maintenance``."""
     return _sketch_maintenance(
         stream_df,
         store_path,

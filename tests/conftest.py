@@ -13,6 +13,16 @@ SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    # pyspark warns, then guesses, when a pandas function annotates only
+    # some of its parameters; make that a failure so a partial hint
+    # anywhere in the package fails the suite instead of a warnings line
+    config.addinivalue_line(
+        "filterwarnings",
+        "error:Cannot infer the eval type from type hints:UserWarning",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests")

@@ -599,53 +599,6 @@ def test_sessionize_backdated_event_extends_session_start(spark, tmp_path):
     assert s.n_events == 2 and s.duration_s == 300
 
 
-def test_streaming_dedup_admission_builds_store_incrementally(spark, tmp_path):
-    """Continuous corpus admission: batch 2's exact dup and near-dup of
-    already-admitted docs are REJECTED against the store built by batch 1;
-    genuinely new text is admitted. In-batch exact dups keep the lowest id."""
-    from market_data_pipeline_spark.streaming import jobs, txn
-
-    src = str(tmp_path / "docs_src")
-    store = str(tmp_path / "corpus_store")
-    ckpt = str(tmp_path / "adm_ckpt")
-    schema = "doc_id long, text string"
-
-    base = (
-        "the quick brown fox jumps over the lazy dog and then runs far away "
-        "into the deep green forest before sunset arrives tonight"
-    )
-    other = (
-        "completely different subject matter entirely about spark shuffle "
-        "partitions and adaptive query execution at massive scale"
-    )
-
-    def write(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = jobs.streaming_dedup_admission(stream, store, ckpt)
-        q.awaitTermination()
-
-    # batch 1: two distinct docs + an in-batch exact dup (id 3 == id 1's text)
-    write([(1, base), (2, other), (3, base)])
-    run_once()
-    got1 = {r.doc_id for r in txn.read_appended(spark, store).collect()}
-    assert got1 == {1, 2}, "in-batch exact dup must keep the lowest id"
-
-    # batch 2: exact dup of base (new id), near-dup of base (one word
-    # changed), and a brand-new doc
-    near = base.replace("green", "golden")
-    brand_new = (
-        "tabular training data curation requires deduplication language "
-        "identification quality scoring and careful mixture weighting"
-    )
-    write([(10, base), (11, near), (12, brand_new)])
-    run_once()
-    got2 = {r.doc_id for r in txn.read_appended(spark, store).collect()}
-    assert got2 == {1, 2, 12}, f"store after batch 2: {sorted(got2)}"
-
-
 def test_sessionize_beyond_gap_backdated_event_is_own_session(spark, tmp_path):
     """A late-but-in-watermark event MORE than gap before the open session's
     start must become its own (earlier) closed session — the batch twin
@@ -734,7 +687,8 @@ def test_streaming_cms_maintenance_is_exact_across_batches(spark, tmp_path):
     counters of all events at once — the streaming store after two batches
     must be IDENTICAL to a one-shot batch sketch over the union."""
     from market_data_pipeline_spark.operators.quality import cms_counters
-    from market_data_pipeline_spark.streaming import jobs, txn
+    from market_data_pipeline_spark.sources import tablefmt as tf
+    from market_data_pipeline_spark.streaming import jobs
 
     src = str(tmp_path / "ev_src")
     store = str(tmp_path / "cms_store")
@@ -761,7 +715,7 @@ def test_streaming_cms_maintenance_is_exact_across_batches(spark, tmp_path):
     run_once()
 
     got = {
-        (r.row, r.bucket): r.cnt for r in txn.read_versioned(spark, store).collect()
+        (r.row, r.bucket): r.cnt for r in tf.read(spark, store).collect()
     }
     want_df = cms_counters(
         spark.createDataFrame([(i,) for i in b1 + b2], schema),
@@ -780,7 +734,8 @@ def test_streaming_hll_maintenance_equals_one_shot_sketch(spark, tmp_path):
     estimates, per key."""
     from pyspark.sql import functions as F
 
-    from market_data_pipeline_spark.streaming import jobs, txn
+    from market_data_pipeline_spark.sources import tablefmt as tf
+    from market_data_pipeline_spark.streaming import jobs
 
     src = str(tmp_path / "hll_src")
     store = str(tmp_path / "hll_store")
@@ -804,7 +759,7 @@ def test_streaming_hll_maintenance_equals_one_shot_sketch(spark, tmp_path):
 
     got = {
         r.event_type: r.est
-        for r in txn.read_versioned(spark, store)
+        for r in tf.read(spark, store)
         .select("event_type", F.hll_sketch_estimate("sk").alias("est"))
         .collect()
     }
@@ -907,80 +862,62 @@ def test_sessionize_eviction_replay_three_batches(spark, tmp_path):
 
 
 def test_sketch_store_replayed_batch_is_not_double_applied(spark, tmp_path):
-    """foreachBatch is at-least-once: a crash between the store write and
-    the checkpoint commit REPLAYS the batch with the same id. The commit
-    markers must make the replay a no-op — a fresh checkpoint over the
-    same source replays batch 0 exactly like a crash recovery would, and
-    the CMS counters must NOT double."""
+    """foreachBatch is at-least-once: a crash between the store commit and
+    the checkpoint commit REPLAYS the batch with the same id under the
+    same query id. Deleting ``<ckpt>/commits/0`` is that crash: the rerun
+    re-executes batch 0, and the batch id recorded in the store's
+    manifest must make it a no-op — the CMS counters must NOT double."""
+    import os
+
     from market_data_pipeline_spark.operators.quality import cms_counters
-    from market_data_pipeline_spark.streaming import jobs, txn
+    from market_data_pipeline_spark.sources import tablefmt as tf
+    from market_data_pipeline_spark.streaming import jobs
 
     src = str(tmp_path / "rp_src")
     store = str(tmp_path / "rp_store")
+    ckpt = str(tmp_path / "rp_ckpt")
     schema = "user_id long"
     b1 = [1, 2, 2, 3, 3, 3]
     spark.createDataFrame([(i,) for i in b1], schema).coalesce(1).write.mode(
         "append"
     ).parquet(src)
 
-    def run_once(ckpt):
+    def run_once():
         stream = spark.readStream.schema(schema).parquet(src)
         q = jobs.streaming_cms_maintenance(
-            stream, store, str(tmp_path / ckpt), key_col="user_id", width=64, depth=2
+            stream, store, ckpt, key_col="user_id", width=64, depth=2
         )
         q.awaitTermination()
 
-    run_once("rp_ckpt1")
+    run_once()
     want = {
         (r.row, r.bucket): r.cnt
         for r in cms_counters(
             spark.createDataFrame([(i,) for i in b1], schema), "user_id", width=64, depth=2
         ).collect()
     }
-    got1 = {(r.row, r.bucket): r.cnt for r in txn.read_versioned(spark, store).collect()}
+    got1 = {(r.row, r.bucket): r.cnt for r in tf.read(spark, store).collect()}
     assert got1 == want
-    # fresh checkpoint → the same files arrive again as batch 0 (the replay
-    # shape); the _COMMIT.0 marker must swallow it
-    run_once("rp_ckpt2")
-    got2 = {(r.row, r.bucket): r.cnt for r in txn.read_versioned(spark, store).collect()}
+    n_versions = len(tf.history(spark, store))
+
+    os.remove(os.path.join(ckpt, "commits", "0"))
+    run_once()
+    got2 = {(r.row, r.bucket): r.cnt for r in tf.read(spark, store).collect()}
     assert got2 == want, "replayed batch 0 was double-applied"
-    assert txn.committed_ids(spark, store) == [0]
-
-
-def test_admission_store_uncommitted_dir_is_invisible_then_overwritten(spark, tmp_path):
-    """Crash window: a batch directory written WITHOUT its commit marker
-    (the crash-between-write-and-mark state) must be invisible to readers
-    and must be cleanly overwritten when the batch replays."""
-    from market_data_pipeline_spark.streaming import jobs, txn
-
-    src = str(tmp_path / "cw_src")
-    store = str(tmp_path / "cw_store")
-    ckpt = str(tmp_path / "cw_ckpt")
-    schema = "doc_id long, text string"
-    doc = (
-        "a perfectly ordinary document about distributed systems and the "
-        "commit protocols that keep them honest under partial failure"
-    )
-    # simulate the crashed attempt: half-written junk in batch=0, no marker
-    spark.createDataFrame([(999, "junk from a crashed attempt")], schema).write.mode(
-        "overwrite"
-    ).parquet(txn.data_dir(store, "batch=", 0))
-    assert txn.read_appended(spark, store) is None, "uncommitted dir leaked"
-
-    spark.createDataFrame([(1, doc)], schema).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = jobs.streaming_dedup_admission(stream, store, ckpt)
-    q.awaitTermination()
-
-    rows = txn.read_appended(spark, store).collect()
-    assert {r.doc_id for r in rows} == {1}, "crashed junk survived the replay"
-    assert txn.committed_ids(spark, store) == [0]
+    assert len(tf.history(spark, store)) == n_versions
+    # Spark did re-run batch 0: its commit marker is back
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
 
 
 def test_sketch_store_gc_keeps_newest_two_versions(spark, tmp_path):
-    """Version GC: after three committed batches only v=1 and v=2 (plus
-    their markers) remain, and the reader resolves the newest."""
-    from market_data_pipeline_spark.streaming import jobs, txn
+    """Version GC: after three committed batches the store keeps two
+    snapshots, still knows all three batch ids (the vacuum sidecar), and
+    the reader resolves the newest."""
+    import json
+    import os
+
+    from market_data_pipeline_spark.sources import tablefmt as tf
+    from market_data_pipeline_spark.streaming import jobs
 
     src = str(tmp_path / "gc_src")
     store = str(tmp_path / "gc_store")
@@ -1000,8 +937,11 @@ def test_sketch_store_gc_keeps_newest_two_versions(spark, tmp_path):
     write_and_run([1])
     write_and_run([2])
     write_and_run([3])
-    assert txn.committed_ids(spark, store) == [1, 2]
-    got_mass = sum(r.cnt for r in txn.read_versioned(spark, store).collect())
+    assert len(tf.history(spark, store)) == 2
+    with open(os.path.join(ckpt, "metadata")) as fh:
+        app = "sketch-" + json.load(fh)["id"]
+    assert tf.committed_batches(spark, store, app) == {0, 1, 2}
+    got_mass = sum(r.cnt for r in tf.read(spark, store).collect())
     assert got_mass == 2 * 3  # depth × all events ever seen
 
 
@@ -1051,10 +991,11 @@ def test_streaming_jsonl_ingest_exactly_once_two_runs(spark, tmp_path):
 
 
 def test_streaming_dedup_admission_into_versioned_table(spark, tmp_path):
-    """The table-store twin: admission semantics identical to the marker-
-    file variant, but the corpus is a versioned TABLE — each admitted
-    batch is a time-travelable version carrying its batch id as txn, and
-    a replay with a fresh checkpoint admits nothing twice."""
+    """Corpus admission into a versioned TABLE: in-batch exact dups keep
+    the lowest id, a later batch's exact and near dups of admitted docs
+    are rejected against the table, each admitted batch is a
+    time-travelable version carrying its batch id as txn, and a replay
+    with a fresh checkpoint admits nothing twice."""
     from market_data_pipeline_spark.sources import tablefmt as tf
     from market_data_pipeline_spark.streaming import jobs
 
@@ -1353,7 +1294,8 @@ def test_streaming_histogram_maintenance_is_exact_across_batches(spark, tmp_path
     """Histogram counts are a linear sketch: bin counts merged batch-by-
     batch equal the one-shot batch histogram over the union — and the
     quantile read side picks the hand-computable bin edges."""
-    from market_data_pipeline_spark.streaming import jobs, txn
+    from market_data_pipeline_spark.sources import tablefmt as tf
+    from market_data_pipeline_spark.streaming import jobs
 
     src = str(tmp_path / "hv_src")
     store = str(tmp_path / "h_store")
@@ -1379,7 +1321,7 @@ def test_streaming_histogram_maintenance_is_exact_across_batches(spark, tmp_path
     write(b2)
     run_once()
 
-    got = {r.bin: r.cnt for r in txn.read_versioned(spark, store).collect()}
+    got = {r.bin: r.cnt for r in tf.read(spark, store).collect()}
     want_df = jobs.histogram_counters(
         spark.createDataFrame([(float(v),) for v in b1 + b2], schema),
         "value", 0.0, 10.0, 10,
@@ -1390,7 +1332,7 @@ def test_streaming_histogram_maintenance_is_exact_across_batches(spark, tmp_path
     est = {
         r.q: r.est
         for r in jobs.histogram_quantiles(
-            txn.read_versioned(spark, store), 0.0, 10.0, 10, qs=(0.5, 0.9)
+            tf.read(spark, store), 0.0, 10.0, 10, qs=(0.5, 0.9)
         ).collect()
     }
     # N=10: ceil(.5*10)=5 -> cum reaches 5 in bin 1 (2+3); ceil(.9*10)=9

@@ -168,6 +168,35 @@ def test_vacuum_preserves_exactly_once_dedup_horizon(spark, tmp_path):
     assert tf.committed_batches(spark, path) == {0, 1, 2, 3}
 
 
+def test_log_reads_open_only_retained_manifests(spark, tmp_path, monkeypatch):
+    """A stream that vacuums every batch keeps keep_last manifests and one
+    sidecar; committed_batches and history must open only those (one
+    listing), never probe every version the stream ever committed, and
+    still return every batch id."""
+    path = str(tmp_path / "t_vac_reads")
+    sink = tf.streaming_sink(path)
+    n, keep_last = 8, 2
+    for b in range(n):
+        sink(_df(spark, b, b + 1), b)
+        tf.vacuum(spark, path, keep_last=keep_last)
+    n_sidecars = len(tf._sidecar_paths(spark, path))
+    assert n_sidecars == 1
+
+    real_read = tf._read_json
+    opened: list[str] = []
+
+    def counting_read(spark_, p):
+        opened.append(p)
+        return real_read(spark_, p)
+
+    monkeypatch.setattr(tf, "_read_json", counting_read)
+    assert tf.committed_batches(spark, path) == set(range(n))
+    assert len(opened) <= keep_last + n_sidecars, opened
+    opened.clear()
+    assert [h["version"] for h in tf.history(spark, path)] == [n - 2, n - 1]
+    assert len(opened) == keep_last, opened
+
+
 def test_streaming_sink_bounded_retries_fail_loudly(spark, tmp_path, monkeypatch):
     """A rename that keeps failing for a non-conflict reason must surface
     as CommitConflict after a bounded number of retries, not hang the
