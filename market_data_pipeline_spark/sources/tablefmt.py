@@ -604,6 +604,11 @@ def _commit(
     files once, then race for the next version number: on a lost race
     only the metadata step retries, rebased on the new head (the data
     files already sit in their own directory and join a later manifest).
+    The head is read again after the write, so only metadata work sits
+    between reading it and the rename: the rename onto ``v{head + 1}``
+    fails only while that manifest exists, and a vacuum running beside
+    enough foreign commits can delete it, so a slow gap would let a
+    manifest land below the head, hidden from every reader.
 
     ``rewrite(head)``, when given, commits instead whenever a table
     exists: it plans against that head and commits through
@@ -622,11 +627,12 @@ def _commit(
         if txn is not None and txn in committed_batches(spark, path, txn_app):
             return None
         head = current_version(spark, path)
+        if written is None and (rewrite is None or head is None):
+            written = _write_data(spark, path, df)
+            head = current_version(spark, path)
         try:
             if rewrite is not None and head is not None:
                 return rewrite(head)
-            if written is None:
-                written = _write_data(spark, path, df)
             parent = None if head is None else _manifest(spark, path, head)
             if op == "overwrite" or parent is None:
                 keep, schema = [], json.loads(df.schema.json())
@@ -1051,13 +1057,16 @@ def _replace_files(
     carry-over, their stats copied from the parent manifest) and replaces
     the rest with ``new_df``'s files. Any op that plans against a specific
     head (delete/merge/compact/cluster) is invalidated by a concurrent
-    commit, so unlike append we must NOT silently rebase: the manifest
-    rename claims ``v{expected_head + 1}``, which any commit since
-    ``expected_head`` already holds, so the loser raises CommitConflict
-    and the caller re-runs the whole operation against the new head
-    (serializable isolation, the choice production formats make for
-    row-rewriting ops). Callers that already read the parent manifest pass
-    it via ``parent_man`` to avoid a redundant storage round trip."""
+    commit, so unlike append we must NOT silently rebase: a head that
+    moved past ``expected_head`` raises CommitConflict and the caller
+    re-runs the whole operation against the new head (serializable
+    isolation, the choice production formats make for row-rewriting ops).
+    The head is re-read right before the rename: the rename onto
+    ``v{expected_head + 1}`` alone is no conflict check once vacuum may
+    have deleted that manifest during the plan and the data write, and
+    winning it then would leave a version below the head that no reader
+    sees. Callers that already read the parent manifest pass it via
+    ``parent_man`` to avoid a redundant storage round trip."""
     new_files: list[str] = []
     new_stats: dict = {}
     if new_df is not None:
@@ -1072,6 +1081,12 @@ def _replace_files(
         parent_man, expected_head, op, untouched, new_files, new_stats,
         parent_man.get("schema"), txn, txn_app,
     )
+    head = current_version(spark, path)
+    if head != expected_head:
+        raise CommitConflict(
+            f"{op} planned against v{expected_head} but head is v{head}; "
+            "re-run the operation"
+        )
     _write_json_exclusive(
         spark, f"{path}/{_MANIFESTS}/v{expected_head + 1}.json", doc
     )
@@ -1253,10 +1268,6 @@ def cluster(
     # file list of the head it read, so a concurrent commit must conflict
     # sized=False: a rebalance shuffle would undo the Z-order layout
     return _replace_files(spark, path, head, [], clustered, "cluster", sized=False)
-
-
-def _sidecar_paths(spark: SparkSession, path: str) -> list[str]:
-    return _listing(spark, path)[1]
 
 
 def _sidecar_apps(

@@ -179,7 +179,7 @@ def test_log_reads_open_only_retained_manifests(spark, tmp_path, monkeypatch):
     for b in range(n):
         sink(_df(spark, b, b + 1), b)
         tf.vacuum(spark, path, keep_last=keep_last)
-    n_sidecars = len(tf._sidecar_paths(spark, path))
+    n_sidecars = len(tf._listing(spark, path)[1])
     assert n_sidecars == 1
 
     real_read = tf._read_json
@@ -682,6 +682,55 @@ def test_compact_and_cluster_conflict_is_loud_not_lost(spark, tmp_path, monkeypa
     assert tf.read(spark, path).count() == 12
 
 
+def _race_vacuum_gap(monkeypatch, path):
+    """Make the next data write first land two foreign appends and a
+    vacuum(keep_last=1): the manifest right above the head a plan read is
+    then gone, so renaming onto it would succeed below the real head."""
+    real_write = tf._write_data
+    state = {"raced": False}
+
+    def racing_write(spark_, p, df, sized=True):
+        if not state["raced"]:
+            state["raced"] = True
+            tf.append(spark_, p, _df(spark_, 100, 102))
+            tf.append(spark_, p, _df(spark_, 102, 104))
+            tf.vacuum(spark_, p, keep_last=1)
+        return real_write(spark_, p, df, sized)
+
+    monkeypatch.setattr(tf, "_write_data", racing_write)
+
+
+def test_merge_conflict_survives_vacuumed_next_version(spark, tmp_path, monkeypatch):
+    """Foreign commits plus a vacuum between a merge's plan and its commit
+    delete the manifest the merge would claim; the merge must still raise
+    CommitConflict, never land as a version below the head that readers
+    skip (and whose txn would mark a streaming batch done)."""
+    path = str(tmp_path / "merge_vac_gap")
+    tf.append(spark, path, _df(spark, 0, 6))
+    _race_vacuum_gap(monkeypatch, path)
+    with pytest.raises(tf.CommitConflict):
+        tf.merge_upsert(
+            spark, path, _df(spark, 0, 2).selectExpr("id", "-1L AS v"), ["id"],
+            txn=0, txn_app="gap",
+        )
+    monkeypatch.undo()
+    assert tf._listing(spark, path)[0] == [2]  # no ghost v1
+    assert tf.committed_batches(spark, path, "gap") == set()
+    assert tf.read(spark, path).count() == 10
+
+
+def test_append_survives_vacuumed_next_version(spark, tmp_path, monkeypatch):
+    """An append whose data write spans foreign commits and a vacuum must
+    still commit on top of the head, with every row visible."""
+    path = str(tmp_path / "append_vac_gap")
+    tf.append(spark, path, _df(spark, 0, 6))
+    _race_vacuum_gap(monkeypatch, path)
+    assert tf.append(spark, path, _df(spark, 6, 9)) == 3
+    monkeypatch.undo()
+    got = sorted(r["id"] for r in tf.read(spark, path).collect())
+    assert got == list(range(9)) + list(range(100, 104))
+
+
 def test_vacuum_sidecar_generations_survive_partial_cleanup(spark, tmp_path):
     """Vacuum publishes a superset generation BEFORE deleting older ones:
     a crash between the two steps leaves several generations whose UNION
@@ -704,7 +753,7 @@ def test_vacuum_sidecar_generations_survive_partial_cleanup(spark, tmp_path):
     sink(_df(spark, 9, 12), 3)
     tf.vacuum(spark, path, keep_last=1)
     assert tf.committed_batches(spark, path) == {0, 1, 2, 3}
-    gens = tf._sidecar_paths(spark, path)
+    gens = tf._listing(spark, path)[1]
     assert len(gens) == 1
 
 
