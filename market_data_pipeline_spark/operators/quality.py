@@ -1,11 +1,18 @@
-"""Data-quality validation: the reference's ``--mode validate`` as ONE
-aggregate job.
+"""Data-quality validation: the reference's ``--mode validate`` as one
+aggregate per symbol.
 
 Reference parity: /root/reference/src/pipeline.py:377-406 — business-day
 completeness, duplicate timestamps, negative closes, zero-volume bars,
 freshness, and a 0-100 quality score. The reference runs five separate pandas
-passes per symbol; here it is a single groupBy(symbol).agg() — one shuffle,
-map-side partials, scan-bound at any scale.
+passes per symbol; here it is one groupBy(symbol).agg().
+
+Two ways in, one result. ``quality_report`` aggregates a tick-level series
+(one scan, two ``countDistinct``s planned as an Expand). ``quality_rollup``
+reads per-(symbol, day) partials (``day_partials``) that
+``pipeline.Pipeline.load_bars`` aggregates next to the daily bars, so a
+``Pipeline`` that validates scans the ticks once: the rollup is a shuffle of
+one row per bar. Every column rolls up exactly because a time fixes its day:
+distinct times per symbol are the sum of distinct times per day.
 """
 
 from __future__ import annotations
@@ -36,6 +43,56 @@ def quality_report(df: DataFrame, symbol_col="symbol", time_col="time", close_co
         F.sum(F.when(F.col(close_col) < 0, 1).otherwise(0)).alias("neg_close"),
         F.sum(F.when(F.col(close_col) == 0, 1).otherwise(0)).alias("zero_close"),
     )
+    return _score(agg)
+
+
+DAY_PARTIALS = ("q_rows", "q_times", "q_freshness", "q_neg_close", "q_zero_close")
+
+
+def day_partials() -> list[Column]:
+    """Aggregates, per (symbol, day) group of raw ticks (``ts``, ``value``),
+    of what ``quality_report`` sees of that day: valid rows, distinct valid
+    times, the last valid time, negative and zero closes. A tick is valid
+    when ``ts`` and ``value`` are both non-null — the rows
+    ``series_from_events`` keeps — so a day of only null closes counts 0
+    rows. Named ``DAY_PARTIALS``; ``quality_rollup`` reads them."""
+    t, c = F.col("ts"), F.col("value")
+    ok = t.isNotNull() & c.isNotNull()
+    return [
+        F.count(F.when(ok, 1)).alias("q_rows"),
+        F.count_distinct(F.when(ok, t)).alias("q_times"),
+        F.max(F.when(ok, t)).alias("q_freshness"),
+        F.count(F.when(ok & (c < 0), 1)).alias("q_neg_close"),
+        F.count(F.when(ok & (c == 0), 1)).alias("q_zero_close"),
+    ]
+
+
+def quality_rollup(partials: DataFrame) -> DataFrame:
+    """``quality_report`` of the tick series, from (symbol, d, *DAY_PARTIALS)
+    rows. Days without a valid row are dropped first, as the series drops
+    their ticks. ``dup_times`` is rows minus distinct times summed over
+    days, which is exact: a time lies in one day only."""
+    agg = (
+        partials.filter(F.col("q_rows") > 0)
+        .groupBy("symbol")
+        .agg(
+            F.sum("q_rows").alias("n_rows"),
+            F.count(F.lit(1)).alias("n_days"),
+            F.min("d").alias("first_day"),
+            F.max("d").alias("last_day"),
+            F.max("q_freshness").alias("freshness"),
+            (F.sum("q_rows") - F.sum("q_times")).alias("dup_times"),
+            F.sum("q_neg_close").alias("neg_close"),
+            F.sum("q_zero_close").alias("zero_close"),
+        )
+    )
+    return _score(agg)
+
+
+def _score(agg: DataFrame) -> DataFrame:
+    """Expected business days, missing days and the quality score on a
+    per-symbol frame of n_days, first_day, last_day, dup_times, neg_close
+    and zero_close."""
     # Mon-Fri business days in [first_day, last_day]: full weeks contribute 5
     # each; the remainder is resolved from the start weekday. weekday(): 0=Mon.
     span = F.datediff(F.col("last_day"), F.col("first_day")) + 1

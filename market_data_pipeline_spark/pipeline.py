@@ -19,6 +19,16 @@ kept with ``localCheckpoint``. Every bar-derived frame of the instance
 (daily, signals, breadth, health, regime) reads that one snapshot, so the
 tick scan and the (symbol, day) aggregation shuffle run once, and the frames
 are consistent with each other even if the tick files change underneath.
+The snapshot also carries per-(symbol, day) quality partials, built in the
+same aggregate, and ``validate_data_quality`` rolls them up: a pass that
+validates scans the ticks once. To fit the partials' distinct count of
+times into that one exchange, the ticks are repartitioned by (symbol, day)
+and cross it raw, not map-side combined. A ``Pipeline`` that never
+validates (CLI ``daily`` and ``full``) pays that larger shuffle for
+nothing: on ~1M ticks and 4 shared cores the snapshot took a median 1.4 s
+against 0.65 s for the combined bars alone, and a fresh
+``run_daily_update`` 3.3 s against 2.3 s, while validating alone fell from
+2.7 s to 1.8 s.
 The snapshot belongs to the instance: it is freed by Spark's context cleaner
 once the instance and the frames built on it are dropped, and a new
 ``Pipeline`` reads the ticks afresh. ``localCheckpoint`` gives up lineage,
@@ -32,12 +42,23 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from market_data_pipeline_spark.config import load_config
 from market_data_pipeline_spark.functions.helpers import series_window
 from market_data_pipeline_spark.operators import breadth, cleaning, indicators, quality, screeners
 from market_data_pipeline_spark.session import tune_existing
-from market_data_pipeline_spark.sources.tables import bars_from_events
+from market_data_pipeline_spark.sources.tables import bar_aggs, load_table
+
+
+def _bar_snapshot(spark: SparkSession, source: str) -> DataFrame:
+    """Daily bars (``bars_from_events``' columns) plus ``quality.DAY_PARTIALS``
+    per (symbol, day): one aggregate over one exchange. The repartition on
+    the grouping keys lets the distinct partial share the bars' exchange."""
+    ticks = load_table(spark, source, "events").select(
+        F.col("user_id").alias("symbol"), F.to_date("ts").alias("d"), "ts", "value"
+    )
+    return ticks.repartition("symbol", "d").groupBy("symbol", "d").agg(*bar_aggs(), *quality.day_partials())
 
 
 class Pipeline:
@@ -54,6 +75,7 @@ class Pipeline:
         if isinstance(config, (str, Path)):
             config = load_config(config)
         self.config = config or {}
+        self._snapshot: DataFrame | None = None
         self._bars: DataFrame | None = None
 
     # -- data acquisition ---------------------------------------------------
@@ -67,9 +89,16 @@ class Pipeline:
         snapshot. It is this instance's consistent view of the ticks and is
         freed when the instance is dropped. Without lineage, a lost executor
         fails the job; build a new ``Pipeline`` to recover.
+
+        The checkpoint also holds the quality partials that
+        ``validate_data_quality`` reads; the bars are a projection of it.
+        Building them costs one shuffle of raw ticks, which a caller that
+        never validates pays in place of the map-side combined one
+        ``tables.bars_from_events`` plans.
         """
         if self._bars is None:
-            self._bars = bars_from_events(self.spark, self.source).localCheckpoint()
+            self._snapshot = _bar_snapshot(self.spark, self.source).localCheckpoint()
+            self._bars = self._snapshot.drop(*quality.DAY_PARTIALS)
         return self._bars
 
     # -- §3.1 daily update --------------------------------------------------
@@ -118,12 +147,17 @@ class Pipeline:
 
     def validate_data_quality(self, series: DataFrame | None = None) -> DataFrame:
         """Per-symbol quality report: completeness vs business days,
-        duplicates, negative/zero closes, freshness, quality score."""
-        if series is None:
-            from market_data_pipeline_spark.sources.tables import series_from_events
+        duplicates, negative/zero closes, freshness, quality score.
 
-            series = series_from_events(self.spark, self.source)
-        return quality.quality_report(series)
+        By default it is rolled up from the quality partials in the bar
+        snapshot (built by ``load_bars`` if it is not yet), which is one
+        shuffle of a row per bar and no tick scan. An explicit tick-level
+        ``series`` is aggregated directly by ``quality.quality_report``.
+        """
+        if series is not None:
+            return quality.quality_report(series)
+        self.load_bars()
+        return quality.quality_rollup(self._snapshot)
 
     # -- universe -----------------------------------------------------------
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -66,9 +66,20 @@ def read_events(
 
     ``open_stream``, given the file's read schema, returns the streaming
     frame to normalize in place of the batch read.
+
+    ``nanosAsLong`` is needed only while the schema is inferred; the caller's
+    value is restored right after, and the inferred long ``ts`` still reads.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(conf, None)
+    spark.conf.set(conf, "true")
+    try:
+        df = spark.read.parquet(path)
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
     if open_stream is not None:
         df = open_stream(df.schema)
     ts_type = df.schema["ts"].dataType.typeName()
@@ -111,6 +122,19 @@ def series_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def bar_aggs() -> list[Column]:
+    """The OHLCV aggregates of one bar over raw ticks (``ts``, ``value``):
+    open, high, low, close, volume, n_trades."""
+    return [
+        F.min_by("value", "ts").alias("open"),
+        F.max("value").alias("high"),
+        F.min("value").alias("low"),
+        F.max_by("value", "ts").alias("close"),
+        F.round(F.sum("value"), 4).alias("volume"),
+        F.count(F.lit(1)).alias("n_trades"),
+    ]
+
+
 def bars_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily OHLCV bars derived from the tick stream.
 
@@ -125,22 +149,18 @@ def bars_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange fewer but plans the partial agg ABOVE the shuffle
     (empirically verified), pushing the FULL tick stream across the wire
     and concentrating hot symbols — strictly worse at 100 TB.
+
+    Every registry query reads bars through this function and keeps that plan.
+    ``pipeline.Pipeline.load_bars`` deliberately moves raw ticks once,
+    repartitioned by (symbol, day): its snapshot also carries the quality
+    partials, whose distinct count of times needs a tick-level exchange,
+    and the separate quality scan it replaces shuffled the ticks as well.
     """
     e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            F.col("user_id").alias("symbol"),
-            F.to_date("ts").alias("d"),
-        )
-        .agg(
-            F.min_by("value", "ts").alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", "ts").alias("close"),
-            F.round(F.sum("value"), 4).alias("volume"),
-            F.count(F.lit(1)).alias("n_trades"),
-        )
-    )
+    return e.groupBy(
+        F.col("user_id").alias("symbol"),
+        F.to_date("ts").alias("d"),
+    ).agg(*bar_aggs())
 
 
 # Shared DuckDB-oracle CTE texts (kept beside the builders so the SQL twin and
@@ -189,14 +209,7 @@ def bars_from_events_interval(
             F.col("user_id").alias("symbol"),
             F.window("ts", width).alias("w"),
         )
-        .agg(
-            F.min_by("value", "ts").alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", "ts").alias("close"),
-            F.round(F.sum("value"), 4).alias("volume"),
-            F.count(F.lit(1)).alias("n_trades"),
-        )
+        .agg(*bar_aggs())
         .select(
             "symbol",
             F.col("w.start").alias("bar_start"),

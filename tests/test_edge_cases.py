@@ -84,3 +84,88 @@ def test_foreachbatch_incremental_sink(spark, sf_dir, tmp_path):
     q.awaitTermination()
     written = spark.read.parquet(target)
     assert written.count() == load_table(spark, sf_dir, "events").count()
+
+
+_NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _set_conf(spark, key, value):
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
+
+
+def test_events_reads_restore_nanos_conf(spark, sf_dir):
+    """Batch and stream events reads leave the caller's nanosAsLong as it
+    was, set or not."""
+    from market_data_pipeline_spark.sources.tables import load_table
+    from market_data_pipeline_spark.streaming import jobs
+
+    before = spark.conf.get(_NANOS, None)
+    try:
+        for value in (None, "false", "true"):
+            _set_conf(spark, _NANOS, value)
+            load_table(spark, sf_dir, "events")
+            assert spark.conf.get(_NANOS, None) == value
+            jobs.stream_events(spark, sf_dir)
+            assert spark.conf.get(_NANOS, None) == value
+    finally:
+        _set_conf(spark, _NANOS, before)
+
+
+def test_nanos_events_read_with_conf_restored(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events file, which Spark rejects without
+    nanosAsLong, still reads through ``read_events`` in a batch collect and
+    in a one-batch stream, with ``ts`` truncated to microseconds."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from market_data_pipeline_spark.sources.tables import load_table
+    from market_data_pipeline_spark.streaming import jobs
+
+    ns = [1_704_103_200_123_456_789, 1_704_103_201_000_000_999, None]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+            "user_id": pa.array([7, 7, 8], pa.int64()),
+            "event_type": ["a", "b", "a"],
+            "value": [1.0, 2.0, 3.0],
+            "props": ["", "", ""],
+        }),
+        tmp_path / "events.parquet",
+        version="2.6",
+    )
+    want = [
+        (1, dt.datetime(2024, 1, 1, 10, 0, 0, 123456)),
+        (2, dt.datetime(2024, 1, 1, 10, 0, 1)),
+        (3, None),
+    ]
+    before = spark.conf.get(_NANOS, None)
+    try:
+        spark.conf.unset(_NANOS)
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            spark.read.parquet(str(tmp_path / "events.parquet"))
+
+        batch = load_table(spark, str(tmp_path), "events").select("event_id", F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+        got = sorted(batch.collect(), key=lambda r: r[0])
+        assert spark.conf.get(_NANOS, None) is None
+
+        ev = jobs.stream_events(spark, str(tmp_path)).select("event_id", F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+        q = (
+            ev.writeStream.format("memory").queryName("nanos_events")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination()
+        streamed = sorted(spark.table("nanos_events").collect(), key=lambda r: r[0])
+    finally:
+        _set_conf(spark, _NANOS, before)
+    fmt = [(i, t.strftime("%Y-%m-%d %H:%M:%S.%f") if t else None) for i, t in want]
+    assert [tuple(r) for r in got] == fmt
+    assert [tuple(r) for r in streamed] == fmt

@@ -104,15 +104,20 @@ def test_load_bars_built_once_per_instance(spark, sf_dir):
 
     sc = spark.sparkContext
     try:
-        sc.setJobGroup("quality_alone", "quality without bars")
-        Pipeline(spark, sf_dir).validate_data_quality()
-        assert not any(n.startswith("localCheckpoint") for n in _stage_names(spark, "quality_alone"))
-
         p = Pipeline(spark, sf_dir)
         bars = p.load_bars()
         assert p.load_bars() is bars
         plan = bars._jdf.queryExecution().optimizedPlan().toString().lower()
         assert "parquet" not in plan and "relation" not in plan
+
+        # quality rolls up the partials the snapshot carries: no tick scan
+        sc.setJobGroup("quality_on_snapshot", "quality over the bar snapshot")
+        rep = p.validate_data_quality()
+        rep.collect()
+        names = _stage_names(spark, "quality_on_snapshot")
+        assert 1 <= len(sc.statusTracker().getJobIdsForGroup("quality_on_snapshot")) <= 2
+        assert names and not any(n.startswith(("parquet at", "localCheckpoint")) for n in names)
+        assert "relation" not in rep._jdf.queryExecution().optimizedPlan().toString().lower()
 
         sc.setJobGroup("breadth_on_snapshot", "breadth over the bar snapshot")
         br = breadth.derive_breadth(p.load_bars())
@@ -124,6 +129,18 @@ def test_load_bars_built_once_per_instance(spark, sf_dir):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_bar_snapshot_is_one_exchange(spark, sf_dir):
+    """Bars and quality partials come out of one aggregate over one
+    repartition of the ticks, its distinct partial included."""
+    import re
+
+    from market_data_pipeline_spark.pipeline import _bar_snapshot
+
+    plan = _bar_snapshot(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange\b", plan)) == 1
+    assert "count(distinct" in plan
 
 
 def test_load_bars_is_a_snapshot_not_a_cache(spark, sf_dir, tmp_path):
@@ -154,6 +171,83 @@ def test_load_bars_is_a_snapshot_not_a_cache(spark, sf_dir, tmp_path):
 def test_validate_data_quality_columns(spark, sf_dir):
     rep = Pipeline(spark, sf_dir).validate_data_quality()
     assert {"symbol", "quality_score", "missing_days", "dup_times"} <= set(rep.columns)
+
+
+def _adversarial_ticks(path) -> None:
+    """Ticks that every quality check fires on, written as an events table.
+    2024-01-01 is a Monday."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def at(day, hour):
+        return dt.datetime(2024, 1, day, hour)
+
+    rows = [  # (user_id, ts, value)
+        # symbol 1: a duplicate time, a negative and a zero close, a
+        # skipped weekday, and a last day whose only tick has a null value
+        (1, at(1, 10), 10.0), (1, at(1, 10), 11.0), (1, at(1, 11), 12.0),
+        (1, at(2, 10), -1.0), (1, at(2, 12), None), (1, None, 5.0),
+        (1, at(2, 13), 7.0), (1, at(2, 13), None),
+        (1, at(4, 10), 0.0), (1, at(5, 9), None),
+        # symbol 2: a weekend tick and a duplicate zero close
+        (2, at(6, 10), 3.0), (2, at(8, 10), 0.0), (2, at(8, 10), 0.0),
+        # null symbol, with a duplicate and a negative close
+        (None, at(3, 10), 1.0), (None, at(3, 10), -2.0), (None, None, None),
+        (3, at(9, 15), 4.0),  # one tick
+        (4, at(9, 15), None), (4, None, 1.0),  # no valid tick at all
+    ]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(rows)), pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[0] for r in rows], pa.int64()),
+            "event_type": pa.array(["trade"] * len(rows)),
+            "value": pa.array([r[2] for r in rows], pa.float64()),
+            "props": pa.array([""] * len(rows)),
+        }),
+        path,
+    )
+
+
+def test_quality_rollup_equals_tick_level_report(spark, tmp_path):
+    """The snapshot rollup equals quality_report on the tick series and the
+    DuckDB oracle, row for row, on duplicates, nulls, non-positive closes,
+    a day of only null closes and a one-tick symbol."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entrymod
+    from market_data_pipeline_spark.operators import quality
+    from market_data_pipeline_spark.sources.tables import series_from_events
+
+    _adversarial_ticks(str(tmp_path / "events.parquet"))
+    rolled = Pipeline(spark, str(tmp_path)).validate_data_quality()
+    direct = quality.quality_report(series_from_events(spark, str(tmp_path)))
+    assert rolled.dtypes == direct.dtypes
+    got = rolled.collect()
+    assert sorted(got, key=str) == sorted(direct.collect(), key=str)
+
+    by_symbol = {r.symbol: r for r in got}
+    assert set(by_symbol) == {1, 2, 3, None}
+    one = by_symbol[1]
+    assert (one.n_rows, one.n_days, one.dup_times, one.neg_close, one.zero_close) == (6, 3, 1, 1, 1)
+    assert (str(one.last_day), one.missing_days) == ("2024-01-04", 1)
+    assert by_symbol[2].dup_times == 1 and by_symbol[None].dup_times == 1
+    assert by_symbol[3].n_rows == 1 and by_symbol[3].quality_score == 100.0
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    oracle = con.sql(
+        "SELECT * REPLACE (CAST(freshness AS VARCHAR) AS freshness) FROM ("
+        + entrymod.oracle_sql()["inv_a6a8_quality"] + ")"
+    )
+    cols = rolled.columns
+    assert sorted(oracle.columns) == sorted(cols)
+    want = sorted((tuple(r[oracle.columns.index(c)] for c in cols) for r in oracle.fetchall()), key=str)
+    got_str = rolled.withColumn("freshness", F.col("freshness").cast("string")).collect()
+    assert sorted(map(tuple, got_str), key=str) == want
 
 
 def test_signal_report_markdown(spark, sf_dir):

@@ -7,11 +7,16 @@ twin in DuckDB on the same parquet views, and compares:
 - order-insensitive values (rows sorted after stringifying, floats via repr
   of round-tripped values) — stricter than any reasonable driver hash.
 
+Each PASS and rows-only line ends with ``sig=<digest>``, a short hash of the
+query's Spark-side ``frame_sig``, so two runs' logs can be diffed to show
+that every result is unchanged.
+
 Usage: python tools/verify_local.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import os
@@ -95,6 +100,14 @@ def frame_sig(cols, rows):
     return out
 
 
+def sig_digest(cols, sig) -> str:
+    """12 hex digits of sha1 over the sorted column names and a ``frame_sig``."""
+    h = hashlib.sha1("|".join(sorted(cols)).encode())
+    for line in sig:
+        h.update(b"\n" + line.encode())
+    return h.hexdigest()[:12]
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -124,7 +137,7 @@ def main():
             continue
         if name not in oracles:
             n_rowsonly += 1
-            print(f"rows-only {name}: {len(srows)} rows  [{time.time()-t0:.1f}s]")
+            print(f"rows-only {name}: {len(srows)} rows  sig={sig_digest(scols, frame_sig(scols, srows))}  [{time.time()-t0:.1f}s]")
             continue
         try:
             rel = con.sql(oracles[name])
@@ -162,7 +175,7 @@ def main():
                     print(f"   spark: {a}\n   duck : {b}")
         if ok:
             n_pass += 1
-            print(f"PASS {name}: {len(srows)} rows  [{time.time()-t0:.1f}s]")
+            print(f"PASS {name}: {len(srows)} rows  sig={sig_digest(scols, ssig)}  [{time.time()-t0:.1f}s]")
         else:
             n_fail += 1
             failures.append(name)
