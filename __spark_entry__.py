@@ -117,10 +117,9 @@ def _docs(spark: SparkSession, sf: str) -> DataFrame:
 
 def _with_series_indicators(bars: DataFrame) -> DataFrame:
     w = series_window(time_col="d")
-    df = indicators.add_sma(bars, periods=(10, 20), w=w)
-    df = indicators.add_rsi(df, period=14, w=w)
-    df = indicators.add_volume_metrics(df, w=w)
-    return df
+    return indicators.chain(
+        bars, indicators.sma(periods=(10, 20), w=w), indicators.rsi(period=14, w=w), indicators.volume_metrics(w=w)
+    )
 
 
 _WIN = "PARTITION BY symbol ORDER BY time"
@@ -387,8 +386,7 @@ FROM series
 def q_w10_dist_ma(spark: SparkSession, sf: str) -> DataFrame:
     s = _series(spark, sf)
     w = series_window()
-    df = indicators.add_sma(s, periods=(20,), w=w)
-    df = indicators.add_dist_ma(df, periods=(20,))
+    df = indicators.chain(s, indicators.sma(periods=(20,), w=w), indicators.dist_ma(periods=(20,)))
     return df.select("symbol", "time", F.round("dist_ma_20", 6).alias("dist_ma_20"))
 
 
@@ -1460,8 +1458,7 @@ FROM scored
 def q_w12_breakout(spark: SparkSession, sf: str) -> DataFrame:
     b = _bars(spark, sf)
     w = series_window(time_col="d")
-    df = indicators.add_sma(b, periods=(10, 20), w=w)
-    df = indicators.add_volume_metrics(df, w=w)
+    df = indicators.chain(b, indicators.sma(periods=(10, 20), w=w), indicators.volume_metrics(w=w))
     out = screeners.detect_breakout(df, ma_period=10, w=w)
     return out.select("symbol", "d", "close", F.col("is_breakout").cast("boolean").alias("is_breakout"))
 
@@ -3054,9 +3051,9 @@ def q_p14_signal_buckets(spark: SparkSession, sf: str) -> DataFrame:
     (report_generator.py:73-79): the filters genuinely read map elements."""
     b = _bars(spark, sf)
     w = series_window(time_col="d")
-    df = indicators.add_sma(b, periods=(10, 20), w=w)
-    df = indicators.add_rsi(df, period=14, w=w)
-    df = indicators.add_volume_metrics(df, w=w)
+    df = indicators.chain(
+        b, indicators.sma(periods=(10, 20), w=w), indicators.rsi(period=14, w=w), indicators.volume_metrics(w=w)
+    )
     df = df.withColumn("__prev_close", F.lag("close", 1).over(w)).withColumn(
         "__prev_ma20", F.lag("ma_20", 1).over(w)
     )

@@ -53,11 +53,10 @@ def derive_breadth(bars: DataFrame, date_col: str = "d") -> DataFrame:
 
 def market_health(breadth: DataFrame, lookback: int = 20, date_col: str = "d") -> DataFrame:
     """A2 — market health over the trailing ``lookback`` days
-    (breadth_analyzer.py:18-46): avg breadth_percent, Σadv/Σdec, Σnh/Σnl."""
-    w = Window.orderBy(F.col(date_col).desc())
-    tail = breadth.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") <= lookback
-    )
+    (breadth_analyzer.py:18-46): avg breadth_percent, Σadv/Σdec, Σnh/Σnl.
+    ``date_col`` is unique per breadth row, so the tail is a top-``lookback``
+    pick, not a single-partition window."""
+    tail = breadth.orderBy(F.col(date_col).desc()).limit(lookback)
     agg = tail.agg(
         F.round(F.avg("breadth_percent"), 4).alias("avg_breadth"),
         F.round(safe_div(F.sum("advancers").cast("double"), F.sum("decliners")), 4).alias("adv_dec"),
@@ -74,14 +73,9 @@ def market_health(breadth: DataFrame, lookback: int = 20, date_col: str = "d") -
 
 def market_regime(breadth: DataFrame, date_col: str = "d") -> DataFrame:
     """W19 — regime bucketing on the latest breadth row
-    (breadth_analyzer.py:48-71): breadth_percent → 5 buckets."""
-    w = Window.orderBy(F.col(date_col).desc())
-    latest = (
-        breadth.filter(F.col("breadth_percent").isNotNull())
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    (breadth_analyzer.py:48-71): breadth_percent → 5 buckets. ``date_col``
+    is unique per breadth row, so the latest row is a top-1 pick."""
+    latest = breadth.filter(F.col("breadth_percent").isNotNull()).orderBy(F.col(date_col).desc()).limit(1)
     bp = F.col("breadth_percent")
     return latest.withColumn(
         "regime",

@@ -3,9 +3,13 @@
 Reference parity: /root/reference/src/transformers/technical_indicators.py —
 eight chained per-symbol pandas passes (SMA, EMA, RSI, MACD, Bollinger, ATR,
 volume, momentum; /root/reference/src/pipeline.py:296-306). Here each is a
-window expression over ONE shared ``Window.partitionBy(symbol).orderBy(time)``
-so the whole chain is a single shuffle + single window stage in the physical
-plan, however many indicators stack.
+native indicator that declares its columns as dependency levels (``Levels``)
+of window expressions over ONE shared ``Window.partitionBy(symbol).orderBy(time)``, and
+:func:`chain` adds a whole stack of them with one ``withColumns`` per level.
+The physical plan has one shuffle on the symbol however many indicators
+stack, and one ``Window`` operator per level that holds a window
+expression: the daily update's seven indicators are three levels and two
+``Window`` operators (the third level is plain arithmetic).
 
 Every rolling op carries pandas' ``min_periods=N`` null-prefix semantics via
 ``min_periods`` (SURVEY.md §7.3). EMA/MACD are the one genuinely non-native
@@ -27,9 +31,11 @@ pre-bucketed by calendar range and the recursion carried across buckets
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from market_data_pipeline_spark.functions.helpers import (
@@ -42,15 +48,72 @@ from market_data_pipeline_spark.functions.helpers import (
 )
 
 
-def add_sma(df: DataFrame, periods=(10, 20, 50, 200), col="close", w: WindowSpec | None = None) -> DataFrame:
+Levels = list[dict[str, Column]]
+"""An indicator's columns as dependency levels: each ``{name: Column}`` may
+read the input's columns and the columns of the levels before it. Names
+starting with ``__`` are temporaries that :func:`chain` drops."""
+
+
+def chain(df: DataFrame, *indicators: Levels) -> DataFrame:
+    """Add every indicator's columns to ``df`` with one ``withColumns`` per
+    dependency level, then at most one ``select``.
+
+    The result equals applying the indicators one after another, each as a
+    run of ``withColumn`` calls and a drop of its temporaries: same columns,
+    values, types and order, a column of ``df`` that an indicator writes
+    replaced in place. Level k of every indicator goes into the k-th
+    ``withColumns``, so window expressions over one shared spec plan as one
+    ``Window`` operator per level instead of one per ``withColumn``, and
+    the plan is analyzed once per level.
+
+    A level that reads a column an earlier indicator writes goes after the
+    level that writes it; a level that writes a column an earlier indicator
+    reads goes no earlier than that read. What a level reads is found by
+    name in its expressions' text: a false match only moves the level
+    later. Two indicators that write the same name raise ``ValueError``.
+    """
+    names = [n for levels in indicators for level in levels for n in level]
+    dups = sorted({n for n in names if names.count(n) > 1})
+    if dups:
+        raise ValueError(f"indicators write the same columns: {dups}")
+    written = set(names)
+    mention = re.compile(r"(?<![\w.])(" + "|".join(map(re.escape, written)) + r")(?!\w)")
+    merged: list[dict[str, Column]] = []
+    at: dict[str, int] = {}  # name -> level that writes it
+    read_at: dict[str, int] = {}  # name -> last level that reads the old column
+    for levels in indicators:
+        k = 0
+        for level in levels:
+            reads = {m for c in level.values() for m in mention.findall(str(c))}
+            k = max([k] + [at[n] + 1 for n in reads if n in at] + [read_at.get(n, 0) for n in level])
+            for n in reads - at.keys():
+                read_at[n] = max(read_at.get(n, 0), k)
+            while len(merged) <= k:
+                merged.append({})
+            merged[k].update(level)
+            at.update(dict.fromkeys(level, k))
+            k += 1
+    temps = {n for n in written if n.startswith("__")}
+    order = [c for c in df.columns if c not in temps]
+    order += [n for n in names if n not in temps and n not in order]
+    for level in merged:
+        if level:
+            df = df.withColumns(level)
+    return df if df.columns == order else df.select(*order)
+
+
+def sma(periods=(10, 20, 50, 200), col="close", w: WindowSpec | None = None) -> Levels:
     """W1 — simple moving averages (technical_indicators.py:17-42)."""
     w = w or series_window()
-    for p in periods:
-        df = df.withColumn(f"ma_{p}", min_periods(F.avg(col), F.col(col), w, p))
-    return df
+    return [{f"ma_{p}": min_periods(F.avg(col), F.col(col), w, p) for p in periods}]
 
 
-def add_rsi(df: DataFrame, period: int = 14, col="close", w: WindowSpec | None = None) -> DataFrame:
+def add_sma(df: DataFrame, periods=(10, 20, 50, 200), col="close", w: WindowSpec | None = None) -> DataFrame:
+    """:func:`sma` on ``df``."""
+    return chain(df, sma(periods, col, w))
+
+
+def rsi(period: int = 14, col="close", w: WindowSpec | None = None) -> Levels:
     """W3 — RSI(14) + signal label (technical_indicators.py:62-81).
 
     delta = diff; gain = clip(delta, 0, ∞); loss = −clip(delta, −∞, 0);
@@ -58,52 +121,49 @@ def add_rsi(df: DataFrame, period: int = 14, col="close", w: WindowSpec | None =
     label: >70 overbought, <30 oversold, else neutral.
     """
     w = w or series_window()
-    delta = F.col(col) - F.lag(col, 1).over(w)
-    df = df.withColumn("__delta", delta)
+    delta = F.col("__delta")
     # greatest() skips nulls (→ 0); pandas clip keeps NaN NaN, so guard
     # explicitly to preserve the reference's mean-over-13-values head rows.
-    gain = F.when(F.col("__delta").isNotNull(), F.greatest(F.col("__delta"), F.lit(0.0)))
-    loss = F.when(F.col("__delta").isNotNull(), F.greatest(-F.col("__delta"), F.lit(0.0)))
-    avg_gain = min_periods(F.avg(gain), F.col("__delta"), w, period)
-    avg_loss = min_periods(F.avg(loss), F.col("__delta"), w, period)
-    rs = safe_div(avg_gain, avg_loss)
-    df = df.withColumn("rsi", F.lit(100.0) - F.lit(100.0) / (F.lit(1.0) + rs))
-    df = df.withColumn(
-        "rsi_signal",
-        F.when(F.col("rsi") > 70, "overbought")
-        .when(F.col("rsi") < 30, "oversold")
-        .otherwise("neutral"),
-    )
-    return df.drop("__delta")
+    gain = F.when(delta.isNotNull(), F.greatest(delta, F.lit(0.0)))
+    loss = F.when(delta.isNotNull(), F.greatest(-delta, F.lit(0.0)))
+    rs = safe_div(min_periods(F.avg(gain), delta, w, period), min_periods(F.avg(loss), delta, w, period))
+    r = F.col("rsi")
+    return [
+        {"__delta": F.col(col) - F.lag(col, 1).over(w)},
+        {"rsi": F.lit(100.0) - F.lit(100.0) / (F.lit(1.0) + rs)},
+        {"rsi_signal": F.when(r > 70, "overbought").when(r < 30, "oversold").otherwise("neutral")},
+    ]
+
+
+def add_rsi(df: DataFrame, period: int = 14, col="close", w: WindowSpec | None = None) -> DataFrame:
+    """:func:`rsi` on ``df``."""
+    return chain(df, rsi(period, col, w))
+
+
+def bollinger(period: int = 20, num_std: float = 2.0, col="close", w: WindowSpec | None = None) -> Levels:
+    """W5 — Bollinger bands (technical_indicators.py:104-134)."""
+    w = w or series_window()
+    mid, sd = F.col("bb_middle"), F.col("__bb_sd")
+    upper, lower = F.col("bb_upper"), F.col("bb_lower")
+    return [
+        {
+            "bb_middle": min_periods(F.avg(col), F.col(col), w, period),
+            "__bb_sd": min_periods(F.stddev_samp(col), F.col(col), w, period),
+        },
+        {"bb_upper": mid + num_std * sd, "bb_lower": mid - num_std * sd},
+        {
+            "bb_width": safe_div(upper - lower, mid),
+            "bb_position": clip(safe_div(F.col(col) - lower, upper - lower), 0.0, 1.0),
+        },
+    ]
 
 
 def add_bollinger(df: DataFrame, period: int = 20, num_std: float = 2.0, col="close", w: WindowSpec | None = None) -> DataFrame:
-    """W5 — Bollinger bands (technical_indicators.py:104-134)."""
-    w = w or series_window()
-    mid = min_periods(F.avg(col), F.col(col), w, period)
-    sd = min_periods(F.stddev_samp(col), F.col(col), w, period)
-    df = (
-        df.withColumn("bb_middle", mid)
-        .withColumn("__bb_sd", sd)
-        .withColumn("bb_upper", F.col("bb_middle") + num_std * F.col("__bb_sd"))
-        .withColumn("bb_lower", F.col("bb_middle") - num_std * F.col("__bb_sd"))
-        .withColumn(
-            "bb_width",
-            safe_div(F.col("bb_upper") - F.col("bb_lower"), F.col("bb_middle")),
-        )
-        .withColumn(
-            "bb_position",
-            clip(
-                safe_div(F.col(col) - F.col("bb_lower"), F.col("bb_upper") - F.col("bb_lower")),
-                0.0,
-                1.0,
-            ),
-        )
-    )
-    return df.drop("__bb_sd")
+    """:func:`bollinger` on ``df``."""
+    return chain(df, bollinger(period, num_std, col, w))
 
 
-def add_atr(df: DataFrame, period: int = 20, w: WindowSpec | None = None) -> DataFrame:
+def atr(period: int = 20, w: WindowSpec | None = None) -> Levels:
     """W6 — ATR + volatility ratio (technical_indicators.py:136-158).
 
     Needs high/low/close columns (daily bars). TR is the join-free 3-way max
@@ -116,30 +176,44 @@ def add_atr(df: DataFrame, period: int = 20, w: WindowSpec | None = None) -> Dat
         F.abs(F.col("high") - prev_c),
         F.abs(F.col("low") - prev_c),
     )
-    df = df.withColumn("__tr", tr)
-    df = df.withColumn("atr", min_periods(F.avg(F.col("__tr")), F.col("__tr"), w, period))
-    df = df.withColumn(
-        "close_std", min_periods(F.stddev_samp("close"), F.col("close"), w, period)
-    )
-    df = df.withColumn("volatility_ratio", safe_div(F.col("atr"), F.col("close")))
-    return df.drop("__tr")
+    return [
+        {"__tr": tr},
+        {
+            "atr": min_periods(F.avg(F.col("__tr")), F.col("__tr"), w, period),
+            "close_std": min_periods(F.stddev_samp("close"), F.col("close"), w, period),
+        },
+        {"volatility_ratio": safe_div(F.col("atr"), F.col("close"))},
+    ]
 
 
-def add_volume_metrics(df: DataFrame, vol_col="volume", close_col="close", w: WindowSpec | None = None) -> DataFrame:
+def add_atr(df: DataFrame, period: int = 20, w: WindowSpec | None = None) -> DataFrame:
+    """:func:`atr` on ``df``."""
+    return chain(df, atr(period, w))
+
+
+def volume_metrics(vol_col="volume", close_col="close", w: WindowSpec | None = None) -> Levels:
     """W7 — volume SMAs, ratio, OBV, volume-price trend
     (technical_indicators.py:160-173). OBV = running Σ sign(Δclose)·volume."""
     w = w or series_window(time_col="d")
     wall = w.rowsBetween(Window.unboundedPreceding, 0)
     delta = F.col(close_col) - F.lag(close_col, 1).over(w)
-    df = (
-        df.withColumn("vol_sma_10", min_periods(F.avg(vol_col), F.col(vol_col), w, 10))
-        .withColumn("vol_sma_20", min_periods(F.avg(vol_col), F.col(vol_col), w, 20))
-        .withColumn("volume_ratio", safe_div(F.col(vol_col), F.col("vol_sma_20")))
-        .withColumn("__dir", F.when(delta.isNull(), F.lit(0.0)).otherwise(F.signum(delta)))
-        .withColumn("obv", F.sum(F.col("__dir") * F.col(vol_col)).over(wall))
-        .withColumn("volume_price_trend", F.col(vol_col) * delta)
-    )
-    return df.drop("__dir")
+    return [
+        {
+            "vol_sma_10": min_periods(F.avg(vol_col), F.col(vol_col), w, 10),
+            "vol_sma_20": min_periods(F.avg(vol_col), F.col(vol_col), w, 20),
+            "__dir": F.when(delta.isNull(), F.lit(0.0)).otherwise(F.signum(delta)),
+        },
+        {
+            "volume_ratio": safe_div(F.col(vol_col), F.col("vol_sma_20")),
+            "obv": F.sum(F.col("__dir") * F.col(vol_col)).over(wall),
+            "volume_price_trend": F.col(vol_col) * delta,
+        },
+    ]
+
+
+def add_volume_metrics(df: DataFrame, vol_col="volume", close_col="close", w: WindowSpec | None = None) -> DataFrame:
+    """:func:`volume_metrics` on ``df``."""
+    return chain(df, volume_metrics(vol_col, close_col, w))
 
 
 def add_vwap(
@@ -222,7 +296,7 @@ def add_drawdown(df: DataFrame, col="close", w: WindowSpec | None = None) -> Dat
     return df.withColumn("max_drawdown", F.min("drawdown").over(wall))
 
 
-def add_returns_momentum(df: DataFrame, col="close", w: WindowSpec | None = None, horizons=(21, 63, 126)) -> DataFrame:
+def returns_momentum(col="close", w: WindowSpec | None = None, horizons=(21, 63, 126)) -> Levels:
     """W8 — returns, cumulative return, momentum (technical_indicators.py:175-197).
 
     cumulative_return uses the exact log-space cumprod rewrite (helper);
@@ -230,20 +304,21 @@ def add_returns_momentum(df: DataFrame, col="close", w: WindowSpec | None = None
     """
     w = w or series_window()
     prev = F.lag(col, 1).over(w)
-    df = (
-        df.withColumn("daily_return_pct", safe_div(F.col(col), prev) - 1)
-        .withColumn("daily_return_abs", F.col(col) - prev)
-        .withColumn(
-            "cumulative_return",
-            cumprod1p_minus1(F.coalesce(F.col("daily_return_pct"), F.lit(0.0)), w),
-        )
-    )
     names = {21: "momentum_1m", 63: "momentum_3m", 126: "momentum_6m"}
+    later = {
+        "cumulative_return": cumprod1p_minus1(F.coalesce(F.col("daily_return_pct"), F.lit(0.0)), w),
+    }
     for k in horizons:
-        df = df.withColumn(
-            names.get(k, f"momentum_{k}"), safe_div(F.col(col), F.lag(col, k).over(w)) - 1
-        )
-    return df
+        later[names.get(k, f"momentum_{k}")] = safe_div(F.col(col), F.lag(col, k).over(w)) - 1
+    return [
+        {"daily_return_pct": safe_div(F.col(col), prev) - 1, "daily_return_abs": F.col(col) - prev},
+        later,
+    ]
+
+
+def add_returns_momentum(df: DataFrame, col="close", w: WindowSpec | None = None, horizons=(21, 63, 126)) -> DataFrame:
+    """:func:`returns_momentum` on ``df``."""
+    return chain(df, returns_momentum(col, w, horizons))
 
 
 def add_ytd_momentum(df: DataFrame, current_year: int, col="close", symbol_col="symbol", time_col="time") -> DataFrame:
@@ -263,12 +338,14 @@ def add_ytd_momentum(df: DataFrame, current_year: int, col="close", symbol_col="
     )
 
 
-def add_dist_ma(df: DataFrame, periods=(10, 20, 50, 200), col="close") -> DataFrame:
+def dist_ma(periods=(10, 20, 50, 200), col="close") -> Levels:
     """W10 — distance to each moving average (technical_indicators.py:199-202)."""
-    for p in periods:
-        ma = F.col(f"ma_{p}")
-        df = df.withColumn(f"dist_ma_{p}", safe_div(F.col(col) - ma, ma))
-    return df
+    return [{f"dist_ma_{p}": safe_div(F.col(col) - F.col(f"ma_{p}"), F.col(f"ma_{p}")) for p in periods}]
+
+
+def add_dist_ma(df: DataFrame, periods=(10, 20, 50, 200), col="close") -> DataFrame:
+    """:func:`dist_ma` on ``df``."""
+    return chain(df, dist_ma(periods, col))
 
 
 def add_support_resistance(df: DataFrame, lookback: int = 10, w: WindowSpec | None = None) -> DataFrame:

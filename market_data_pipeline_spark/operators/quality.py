@@ -12,12 +12,12 @@ reads per-(symbol, day) partials (``day_partials``) that
 ``pipeline.Pipeline.load_bars`` aggregates next to the daily bars, so a
 ``Pipeline`` that validates scans the ticks once: the rollup is a shuffle of
 one row per bar. Every column rolls up exactly because a time fixes its day:
-distinct times per symbol are the sum of distinct times per day.
+duplicate times per symbol are the sum of duplicate times per day.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from market_data_pipeline_spark.functions.helpers import clip
@@ -46,12 +46,23 @@ def quality_report(df: DataFrame, symbol_col="symbol", time_col="time", close_co
     return _score(agg)
 
 
-DAY_PARTIALS = ("q_rows", "q_times", "q_freshness", "q_neg_close", "q_zero_close")
+DAY_PARTIALS = ("q_rows", "q_dup_times", "q_freshness", "q_neg_close", "q_zero_close")
+
+
+def with_dup_times(ticks: DataFrame) -> DataFrame:
+    """Raw ticks (``symbol``, ``d``, ``ts``, ``value``) plus ``__dup_time``:
+    true on a valid tick whose time equals the previous valid tick's time of
+    its (symbol, day), so the valid ticks of a day minus these are its
+    distinct valid times. The window is keyed by (symbol, day, validity): a
+    frame already hash-partitioned on (symbol, day) needs no new exchange."""
+    ok = F.col("ts").isNotNull() & F.col("value").isNotNull()
+    w = Window.partitionBy("symbol", "d", ok).orderBy("ts")
+    return ticks.withColumn("__dup_time", ok & (F.lag("ts", 1).over(w) == F.col("ts")))
 
 
 def day_partials() -> list[Column]:
-    """Aggregates, per (symbol, day) group of raw ticks (``ts``, ``value``),
-    of what ``quality_report`` sees of that day: valid rows, distinct valid
+    """Aggregates, per (symbol, day) group of :func:`with_dup_times` ticks,
+    of what ``quality_report`` sees of that day: valid rows, duplicate valid
     times, the last valid time, negative and zero closes. A tick is valid
     when ``ts`` and ``value`` are both non-null — the rows
     ``series_from_events`` keeps — so a day of only null closes counts 0
@@ -60,7 +71,7 @@ def day_partials() -> list[Column]:
     ok = t.isNotNull() & c.isNotNull()
     return [
         F.count(F.when(ok, 1)).alias("q_rows"),
-        F.count_distinct(F.when(ok, t)).alias("q_times"),
+        F.count(F.when(F.col("__dup_time"), 1)).alias("q_dup_times"),
         F.max(F.when(ok, t)).alias("q_freshness"),
         F.count(F.when(ok & (c < 0), 1)).alias("q_neg_close"),
         F.count(F.when(ok & (c == 0), 1)).alias("q_zero_close"),
@@ -70,8 +81,8 @@ def day_partials() -> list[Column]:
 def quality_rollup(partials: DataFrame) -> DataFrame:
     """``quality_report`` of the tick series, from (symbol, d, *DAY_PARTIALS)
     rows. Days without a valid row are dropped first, as the series drops
-    their ticks. ``dup_times`` is rows minus distinct times summed over
-    days, which is exact: a time lies in one day only."""
+    their ticks. ``dup_times`` is the duplicate times summed over days,
+    which is exact: a time lies in one day only."""
     agg = (
         partials.filter(F.col("q_rows") > 0)
         .groupBy("symbol")
@@ -81,7 +92,7 @@ def quality_rollup(partials: DataFrame) -> DataFrame:
             F.min("d").alias("first_day"),
             F.max("d").alias("last_day"),
             F.max("q_freshness").alias("freshness"),
-            (F.sum("q_rows") - F.sum("q_times")).alias("dup_times"),
+            F.sum("q_dup_times").alias("dup_times"),
             F.sum("q_neg_close").alias("neg_close"),
             F.sum("q_zero_close").alias("zero_close"),
         )

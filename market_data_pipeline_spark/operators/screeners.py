@@ -229,8 +229,7 @@ def composite_signal_scan(
 
     w = series_window(symbol_col=symbol_col, time_col=time_col)
     fast, slow, signal = macd
-    df = indicators.add_sma(bars, periods=(20,), col="close", w=w)
-    df = indicators.add_rsi(df, period=14, w=w)
+    df = indicators.chain(bars, indicators.sma(periods=(20,), col="close", w=w), indicators.rsi(period=14, w=w))
     df = df.withColumn(
         "vol_sma_20",
         min_periods(F.avg("volume"), F.col("volume"), w, 20),

@@ -5,7 +5,10 @@ re-expressed as lazy Spark plans.
 Reference parity (SURVEY.md §3):
 - ``run_daily_update``     ↦ pipeline.py:203-257 + _process_symbol :277-306 —
   the per-symbol ThreadPool fan-out collapses into ONE plan:
-  clean → indicator chain → (optional) partitioned persist.
+  clean → indicator chain → (optional) partitioned persist. The chain is
+  the pandas EMA/MACD pass, then ``indicators.chain`` over the seven native
+  indicators: three ``withColumns`` levels and one ``select``, which plan
+  as two ``Window`` operators over one symbol exchange.
 - ``run_batch_analysis``   ↦ pipeline.py:321-353 — signals = last-row-per-
   symbol frame from the same long table; no per-symbol file re-reads.
 - ``run_full_pipeline``    ↦ pipeline.py:355-375 — daily + breadth + health
@@ -21,14 +24,13 @@ tick scan and the (symbol, day) aggregation shuffle run once, and the frames
 are consistent with each other even if the tick files change underneath.
 The snapshot also carries per-(symbol, day) quality partials, built in the
 same aggregate, and ``validate_data_quality`` rolls them up: a pass that
-validates scans the ticks once. To fit the partials' distinct count of
-times into that one exchange, the ticks are repartitioned by (symbol, day)
-and cross it raw, not map-side combined. A ``Pipeline`` that never
-validates (CLI ``daily`` and ``full``) pays that larger shuffle for
-nothing: on ~1M ticks and 4 shared cores the snapshot took a median 1.4 s
-against 0.65 s for the combined bars alone, and a fresh
-``run_daily_update`` 3.3 s against 2.3 s, while validating alone fell from
-2.7 s to 1.8 s.
+validates scans the ticks once. The partials count duplicate times with a
+``lag`` window over (symbol, day, validity); to fit it into that one
+exchange, the ticks are repartitioned by (symbol, day) and cross it raw,
+not map-side combined. A ``Pipeline`` that never validates (CLI ``daily``
+and ``full``) pays that larger shuffle for nothing: on ~1M ticks and 4
+shared cores the snapshot took a median 1.2 s against 0.7 s for the
+combined bars alone.
 The snapshot belongs to the instance: it is freed by Spark's context cleaner
 once the instance and the frames built on it are dropped, and a new
 ``Pipeline`` reads the ticks afresh. ``localCheckpoint`` gives up lineage,
@@ -54,11 +56,13 @@ from market_data_pipeline_spark.sources.tables import bar_aggs, load_table
 def _bar_snapshot(spark: SparkSession, source: str) -> DataFrame:
     """Daily bars (``bars_from_events``' columns) plus ``quality.DAY_PARTIALS``
     per (symbol, day): one aggregate over one exchange. The repartition on
-    the grouping keys lets the distinct partial share the bars' exchange."""
+    the grouping keys lets the duplicate-time window share the bars'
+    exchange."""
     ticks = load_table(spark, source, "events").select(
         F.col("user_id").alias("symbol"), F.to_date("ts").alias("d"), "ts", "value"
     )
-    return ticks.repartition("symbol", "d").groupBy("symbol", "d").agg(*bar_aggs(), *quality.day_partials())
+    ticks = quality.with_dup_times(ticks.repartition("symbol", "d"))
+    return ticks.groupBy("symbol", "d").agg(*bar_aggs(), *quality.day_partials())
 
 
 class Pipeline:
@@ -109,14 +113,16 @@ class Pipeline:
         symbol-partitioned parquet (the file-per-symbol replacement)."""
         bars = bars if bars is not None else self.load_bars()
         w = series_window(time_col="d")
-        df = indicators.add_ema_macd(bars, spans=(12, 26), time_col="d")
-        df = indicators.add_sma(df, periods=(10, 20), w=w)
-        df = indicators.add_rsi(df, period=14, w=w)
-        df = indicators.add_bollinger(df, w=w)
-        df = indicators.add_atr(df, w=w)
-        df = indicators.add_volume_metrics(df, w=w)
-        df = indicators.add_returns_momentum(df, w=w)
-        df = indicators.add_dist_ma(df, periods=(10, 20))
+        df = indicators.chain(
+            indicators.add_ema_macd(bars, spans=(12, 26), time_col="d"),
+            indicators.sma(periods=(10, 20), w=w),
+            indicators.rsi(period=14, w=w),
+            indicators.bollinger(w=w),
+            indicators.atr(w=w),
+            indicators.volume_metrics(w=w),
+            indicators.returns_momentum(w=w),
+            indicators.dist_ma(periods=(10, 20)),
+        )
         if persist_to:
             df.write.mode("overwrite").partitionBy("symbol").parquet(persist_to)
             df = self.spark.read.parquet(persist_to)

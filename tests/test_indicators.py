@@ -618,3 +618,71 @@ def test_hurst_exponent_replay_and_alternating_floor(spark):
     got = {r.symbol: r.hurst for r in hurst_exponent(df, sizes=sizes).collect()}
     assert got["alt"] == 0.0
     assert got["rw"] == replay([float(x) for x in diffs["rw"]])
+
+
+def _one_by_one(df, *indicators):
+    """The sequential chain ``indicators.chain`` replaces: one ``withColumn``
+    per column in declared order, each indicator's temporaries dropped
+    after it."""
+    for levels in indicators:
+        names = [n for level in levels for n in level]
+        for level in levels:
+            for name, c in level.items():
+                df = df.withColumn(name, c)
+        df = df.drop(*[n for n in names if n.startswith("__")])
+    return df
+
+
+def _adversarial_bars(spark):
+    """Daily bars with an input ``ma_20`` column: a 130-bar symbol, a 40-bar
+    symbol (shorter than the 126-bar momentum) with a zero close and a null
+    volume, and a one-bar symbol."""
+    import datetime as dt
+
+    day0 = dt.date(2024, 1, 1)
+    rows = []
+    for sym, n in ((1, 130), (2, 40), (3, 1)):
+        for i in range(n):
+            close = 0.0 if (sym, i) == (2, 17) else 50.0 + ((i * 7 + sym) % 11) - 0.25 * sym
+            volume = None if (sym, i) == (2, 5) else float(100 + (i * 13) % 29)
+            rows.append((sym, day0 + dt.timedelta(days=i), close + 1.0, close + 2.0, close - 1.0, close, volume, -7.0))
+    return spark.createDataFrame(
+        rows, "symbol long, d date, open double, high double, low double, close double, volume double, ma_20 double"
+    )
+
+
+def test_chain_equals_sequential_composition(spark):
+    """One ``withColumns`` per level gives the sequential chain's columns,
+    order, types and values, the input's ``ma_20`` replaced in place and the
+    cumulative return pinned at −1 after the zero close."""
+    w = series_window(time_col="d")
+    daily = (
+        indicators.sma(periods=(10, 20), w=w),
+        indicators.rsi(period=14, w=w),
+        indicators.bollinger(w=w),
+        indicators.atr(w=w),
+        indicators.volume_metrics(w=w),
+        indicators.returns_momentum(w=w),
+        indicators.dist_ma(periods=(10, 20)),
+    )
+    bars = _adversarial_bars(spark)
+    got = indicators.chain(bars, *daily)
+    want = _one_by_one(bars, *daily)
+    assert got.dtypes == want.dtypes
+    assert got.columns.index("ma_20") == bars.columns.index("ma_20")
+    rows = sorted(got.collect())
+    assert rows == sorted(want.collect())
+    assert len(rows) == 171 and min(r.ma_20 or 0.0 for r in rows) > -7.0
+    two = [r for r in rows if r.symbol == 2]
+    assert two[17].close == 0.0 and {r.cumulative_return for r in two[17:]} == {-1.0}
+    assert all(r.momentum_6m is None for r in two)
+
+    # a reader placed before the writer reads the input's column
+    late = (indicators.dist_ma(periods=(20,)), indicators.sma(periods=(20,), w=w))
+    assert sorted(indicators.chain(bars, *late).collect()) == sorted(_one_by_one(bars, *late).collect())
+
+
+def test_chain_rejects_two_writers_of_one_name(spark):
+    w = series_window(time_col="d")
+    with pytest.raises(ValueError, match="ma_20"):
+        indicators.chain(_adversarial_bars(spark), indicators.sma((10, 20), w=w), indicators.sma((20,), w=w))

@@ -133,14 +133,40 @@ def test_load_bars_built_once_per_instance(spark, sf_dir):
 
 def test_bar_snapshot_is_one_exchange(spark, sf_dir):
     """Bars and quality partials come out of one aggregate over one
-    repartition of the ticks, its distinct partial included."""
+    repartition of the ticks, the duplicate-time lag included."""
     import re
 
     from market_data_pipeline_spark.pipeline import _bar_snapshot
 
     plan = _bar_snapshot(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"\bExchange\b", plan)) == 1
-    assert "count(distinct" in plan
+    # the tree prints root first: the lag window sits above the exchange
+    lag = re.search(r"\bWindow \[lag\(ts#", plan)
+    assert lag and lag.start() < plan.index("Exchange")
+    assert "count(distinct" not in plan
+
+
+def test_daily_update_job_count(spark, sf_dir, tmp_path):
+    """Job counts do not move with host noise, so they are pinned: after
+    ``load_bars``, a persisted daily update runs the three adaptive stages
+    of the write and the read-back's schema job, and never reads the ticks
+    again (they are gone by then)."""
+    import shutil
+
+    shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
+    p = Pipeline(spark, str(tmp_path))
+    p.load_bars()
+    (tmp_path / "events.parquet").unlink()
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("daily_update_jobs", "persisted daily update")
+        p.run_daily_update(persist_to=str(tmp_path / "daily"))
+        assert len(sc.statusTracker().getJobIdsForGroup("daily_update_jobs")) == 4
+        names = _stage_names(spark, "daily_update_jobs")
+        assert sum(n.startswith("parquet at") for n in names) == 1  # the read-back
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_load_bars_is_a_snapshot_not_a_cache(spark, sf_dir, tmp_path):

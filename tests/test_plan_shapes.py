@@ -29,6 +29,20 @@ def test_indicator_chain_single_window_exchange(spark, sf_dir):
     assert introspect.count_exchanges(df) == 2
 
 
+def test_daily_update_one_window_per_level(spark, sf_dir):
+    """``run_daily_update``'s seven native indicators are three dependency
+    levels; two hold window expressions, so the executed plan has two
+    ``Window`` operators (the sequential chain planned nine) over the EMA
+    bucket exchange and the one symbol exchange."""
+    import re
+
+    from market_data_pipeline_spark.pipeline import Pipeline
+
+    plan = Pipeline(spark, sf_dir).run_daily_update()._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bWindow \[", plan)) <= 2
+    assert len(re.findall(r"\bExchange\b", plan)) <= 2
+
+
 def test_dim_joins_broadcast(spark, sf_dir):
     """nation/region (and customer under AQE thresholds) must broadcast —
     a shuffled dim join at 100 TB is a plan bug."""
@@ -354,11 +368,9 @@ def test_every_registered_query_plan_is_scale_clean(registry_sweep):
     """
     allowed_rowwise = {"inv_s_statement_udtf"}  # the deliberate UDTF surface
     allowed_global_window = {
-        "inv_a2_market_health",  # row_number over per-date market aggregate
         "inv_a_mom_growth",  # lag over the O(months) revenue series
         "inv_o6_weekly_topbottom",  # rank symbols within ONE week
         "inv_w16_rolling_corr",  # O(trading days) aligned pair series
-        "inv_w19_regime",  # O(trading days) regime series
         "inv_w20_market_summary",  # latest-date pick on per-date aggregate
         "inv_w_rolling_corr",  # O(trading days) aligned pair series
         "inv_a14_run_summary",  # share-of-total over O(statuses) aggregate
