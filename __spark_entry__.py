@@ -4851,7 +4851,7 @@ def q_st_anomaly(spark: SparkSession, sf: str) -> DataFrame:
     stream over one availableNow pass equals a batch prefix-window scan."""
     from market_data_pipeline_spark.streaming import stateful
 
-    ev = streaming_jobs.stream_events(spark, sf).select("user_id", "event_id", "ts", "value")
+    ev = streaming_jobs.stream_events(spark, sf)
     flagged = stateful.streaming_anomaly_zscore(ev, threshold=2.0, min_obs=10)
     out = streaming_jobs.run_stream_to_memory(spark, flagged, "anomaly_z", output_mode="append")
     return out.select("user_id", "event_id", F.round("value", 4).alias("value"), "zscore", "is_anomaly")
@@ -5241,7 +5241,7 @@ def q_st_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     ``end + gap`` precedes ``max(ts) − delay``."""
     from market_data_pipeline_spark.streaming import stateful
 
-    ev = streaming_jobs.stream_events(spark, sf).select("user_id", "ts", "value")
+    ev = streaming_jobs.stream_events(spark, sf)
     sess = stateful.streaming_sessionize(ev, gap_minutes=30, watermark="10 minutes")
     out = streaming_jobs.run_stream_to_memory(
         spark, sess, "sessionize_stream", output_mode="append"

@@ -125,7 +125,7 @@ class Pipeline:
         )
         if persist_to:
             df.write.mode("overwrite").partitionBy("symbol").parquet(persist_to)
-            df = self.spark.read.parquet(persist_to)
+            df = self.spark.read.schema(df.schema).parquet(persist_to)
         return df
 
     # -- §3.2 batch analysis ------------------------------------------------

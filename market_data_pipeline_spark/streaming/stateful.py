@@ -1,5 +1,6 @@
-"""Custom stateful streaming operator: per-key running totals via
-``applyInPandasWithState`` (SURVEY.md §2.9 north-star surface).
+"""Custom stateful streaming operators via ``applyInPandasWithState``
+(SURVEY.md §2.9 north-star surface): per-key running totals, Welford
+z-score anomalies, gap sessionization and a CUSUM drift monitor.
 
 The reference's closest analog is the per-symbol TTL memo cache that
 accumulates latest quote state across polling rounds
@@ -7,17 +8,45 @@ accumulates latest quote state across polling rounds
 explicit, fault-tolerant (checkpointed with the query), and partitioned by
 key — the 100 TB shape: state lives with the shuffle partition, no driver
 involvement, Arrow batches in and out of Python.
+
+Each operator projects its input to the columns its update function reads
+before the stateful ``groupBy``. Every column of the grouped child crosses
+into Python, and pyspark converts each one from Arrow to pandas for every
+group of every micro-batch: that conversion, not the state math, is most of
+a batch's Python time. String payloads (``event_type``, ``props``) would be
+converted only to be ignored, and a timestamp pays a time-zone conversion;
+the z-score and CUSUM replays read ``ts`` only to order rows, so it crosses
+as epoch microseconds (a long) and the rows are ordered with one
+``np.lexsort``. Sessionization keeps ``ts`` a timestamp: its watermark and
+event-time timeout are defined on it.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 STATE_SCHEMA = "n bigint, total double"
+
+
+def _ts_us() -> Column:
+    """``ts`` as epoch microseconds, the replay-order key sent to Python."""
+    return F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us")
+
+
+def _replay_order(pdf: pd.DataFrame) -> np.ndarray:
+    """Row order of one key's batch for a state replay: (ts, event_id),
+    stable, a null ``ts`` last — the order of a mergesort over both
+    columns. A null makes Arrow hand the longs over as floats; they are
+    not cast otherwise."""
+    ts = pdf["ts_us"].to_numpy()
+    null = pd.isna(ts)
+    return np.lexsort((pdf["event_id"].to_numpy(), np.where(null, 0, ts), null))
 
 
 def running_totals(events: DataFrame) -> DataFrame:
@@ -39,7 +68,7 @@ def running_totals(events: DataFrame) -> DataFrame:
             {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 4)]}
         )
 
-    return events.groupBy("user_id").applyInPandasWithState(
+    return events.select("user_id", "value").groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
@@ -75,24 +104,25 @@ def streaming_anomaly_zscore(
             n, mean, m2 = state.get
         else:
             n, mean, m2 = 0, 0.0, 0.0
-        out = []
         chunks = list(pdf_iter)
         # Arrow hands a key with more than maxRecordsPerBatch rows over as
         # several chunks: concat BEFORE sorting so the Welford replay sees
         # the whole batch in (ts, event_id) order
         pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        for ev_id, v in zip(pdf["event_id"], pd.to_numeric(pdf["value"], errors="coerce")):
-            if pd.isna(v):
-                continue
-            v = float(v)
+        order = _replay_order(pdf)
+        vals = pd.to_numeric(pdf["value"], errors="coerce").to_numpy(dtype=float)[order]
+        seen = ~np.isnan(vals)
+        vals = vals[seen]
+        zs, flags = [], []
+        for v in vals.tolist():
             if n >= min_obs:
                 var = m2 / (n - 1) if n > 1 else 0.0
                 sd = var ** 0.5
                 z = (v - mean) / sd if sd > 0 else 0.0
             else:
                 z = 0.0
-            out.append((int(ev_id), v, round(z, 4), n >= min_obs and abs(z) > threshold))
+            zs.append(round(z, 4))
+            flags.append(n >= min_obs and abs(z) > threshold)
             n += 1
             delta = v - mean
             mean += delta / n
@@ -100,15 +130,16 @@ def streaming_anomaly_zscore(
         state.update((n, mean, m2))
         yield pd.DataFrame(
             {
-                "user_id": [key[0]] * len(out),
-                "event_id": [o[0] for o in out],
-                "value": [o[1] for o in out],
-                "zscore": [o[2] for o in out],
-                "is_anomaly": [o[3] for o in out],
+                "user_id": np.full(len(vals), key[0]),
+                "event_id": pdf["event_id"].to_numpy()[order][seen],
+                "value": vals,
+                "zscore": np.array(zs, dtype=float),
+                "is_anomaly": np.array(flags, dtype=bool),
             }
         )
 
-    return events.groupBy("user_id").applyInPandasWithState(
+    replayed = events.select("user_id", "event_id", _ts_us(), "value")
+    return replayed.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=ANOMALY_OUTPUT_SCHEMA,
         stateStructType=ANOMALY_STATE_SCHEMA,
@@ -250,6 +281,7 @@ def streaming_sessionize(
 
     return (
         events.withWatermark("ts", watermark)
+        .select("user_id", "ts", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -294,14 +326,15 @@ def streaming_cusum(
             # concat BEFORE sorting: Arrow may hand one group over as
             # several chunks, and per-chunk sorting would only locally
             # order each — the state replay needs the full batch ordered
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"], kind="mergesort"
-            )
-            vals = pd.to_numeric(pdf["value"], errors="coerce")
-            for v, mean, std in zip(vals, pdf["mean"], pdf["std"]):
+            pdf = pd.concat(chunks, ignore_index=True)
+            order = _replay_order(pdf)
+            vals = pd.to_numeric(pdf["value"], errors="coerce").to_numpy(dtype=float)[order]
+            means = pdf["mean"].to_numpy(dtype=float)[order]
+            stds = pdf["std"].to_numpy(dtype=float)[order]
+            for v, mean, std in zip(vals.tolist(), means.tolist(), stds.tolist()):
                 if pd.isna(v):
                     continue
-                z = (float(v) - float(mean)) / float(std)
+                z = (v - mean) / std
                 zsp = round(max(0.0, (sp + z) - k) + 1e-13, 10)
                 zsn = round(max(0.0, (sn - z) - k) + 1e-13, 10)
                 up += 1 if zsp > h else 0
@@ -319,7 +352,8 @@ def streaming_cusum(
             }
         )
 
-    return events.groupBy("user_id").applyInPandasWithState(
+    replayed = events.select("user_id", "event_id", _ts_us(), "value", "mean", "std")
+    return replayed.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=CUSUM_OUTPUT_SCHEMA,
         stateStructType=CUSUM_STATE_SCHEMA,

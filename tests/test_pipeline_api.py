@@ -149,8 +149,8 @@ def test_bar_snapshot_is_one_exchange(spark, sf_dir):
 def test_daily_update_job_count(spark, sf_dir, tmp_path):
     """Job counts do not move with host noise, so they are pinned: after
     ``load_bars``, a persisted daily update runs the three adaptive stages
-    of the write and the read-back's schema job, and never reads the ticks
-    again (they are gone by then)."""
+    of the write, reads its output back with the frame's known schema (no
+    schema job), and never reads the ticks again (they are gone by then)."""
     import shutil
 
     shutil.copy(f"{sf_dir}/events.parquet", tmp_path / "events.parquet")
@@ -160,13 +160,15 @@ def test_daily_update_job_count(spark, sf_dir, tmp_path):
     sc = spark.sparkContext
     try:
         sc.setJobGroup("daily_update_jobs", "persisted daily update")
-        p.run_daily_update(persist_to=str(tmp_path / "daily"))
-        assert len(sc.statusTracker().getJobIdsForGroup("daily_update_jobs")) == 4
+        daily = p.run_daily_update(persist_to=str(tmp_path / "daily"))
+        assert len(sc.statusTracker().getJobIdsForGroup("daily_update_jobs")) == 3
         names = _stage_names(spark, "daily_update_jobs")
-        assert sum(n.startswith("parquet at") for n in names) == 1  # the read-back
+        assert not any(n.startswith("parquet at") for n in names)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    # partition inference would read symbol back as int
+    assert dict(daily.dtypes) == dict(p.run_daily_update().dtypes)
 
 
 def test_load_bars_is_a_snapshot_not_a_cache(spark, sf_dir, tmp_path):

@@ -299,6 +299,28 @@ def test_stateful_state_survives_query_restart(spark, tmp_path):
     assert abs(spike.zscore - round(want_z, 4)) < 1e-9
 
 
+def _welford_replay(batches, threshold, min_obs):
+    """Sequential per-key Welford replay of (user_id, event_id, ts, value)
+    rows, one micro-batch after another, each in (ts, event_id) order with
+    a null ts last; rows with a null or NaN value are skipped."""
+    import math
+
+    state, out = {}, []
+    for rows in batches:
+        for uid, ev_id, ts, v in sorted(rows, key=lambda r: (r[2] is None, r[2] or dt.datetime.min, r[1])):
+            if v is None or math.isnan(v):
+                continue
+            n, mean, m2 = state.get(uid, (0, 0.0, 0.0))
+            sd = (m2 / (n - 1)) ** 0.5 if n > 1 else 0.0
+            z = (v - mean) / sd if n >= min_obs and sd > 0 else 0.0
+            out.append((uid, ev_id, v, round(z, 4), n >= min_obs and abs(z) > threshold))
+            n += 1
+            delta = v - mean
+            mean += delta / n
+            state[uid] = (n, mean, m2 + delta * (v - mean))
+    return out
+
+
 def test_anomaly_zscore_orders_a_key_split_across_arrow_chunks(spark, tmp_path):
     """A key with more rows in one micro-batch than
     ``arrow.maxRecordsPerBatch`` reaches the Welford update as several
@@ -334,19 +356,100 @@ def test_anomaly_zscore_orders_a_key_split_across_arrow_chunks(spark, tmp_path):
     finally:
         spark.conf.set(key, prev)
 
-    want = {}
-    n, mean, m2 = 0, 0.0, 0.0
-    for _, ev_id, _, v in sorted(events, key=lambda e: (e[2], e[1])):
-        sd = (m2 / (n - 1)) ** 0.5 if n > 1 else 0.0
-        z = (v - mean) / sd if n >= 10 and sd > 0 else 0.0
-        want[ev_id] = (round(z, 4), n >= 10 and abs(z) > 2.0)
-        n += 1
-        delta = v - mean
-        mean += delta / n
-        m2 += delta * (v - mean)
+    want = {r[1]: (r[3], r[4]) for r in _welford_replay([events], threshold=2.0, min_obs=10)}
     assert got == want
     assert any(flag for _, flag in want.values())
 
+
+def test_anomaly_zscore_equals_sequential_replay_on_adversarial_rows(spark, tmp_path):
+    """The stream sends Python only the columns it replays, with ts as epoch
+    microseconds. Its output must still equal a sequential Welford replay
+    row for row, over two runs of one checkpoint, on input built to break
+    that: null ts rows (replayed last), equal ts values whose event_ids
+    arrive out of order, null and NaN values, a null key, extra string and
+    timestamp columns, and a key split over several Arrow chunks."""
+    import random
+
+    from market_data_pipeline_spark.streaming import stateful
+
+    rnd = random.Random(11)
+    t = dt.datetime(2024, 1, 1, 12, 0, 0)
+
+    def rows(uid, ids, start):
+        out = []
+        for i in ids:
+            ts = None if i % 17 == 5 else t + dt.timedelta(seconds=start + i // 3)
+            v = 10.0 + rnd.gauss(0, 1) + (9.0 if i % 11 == 10 else 0.0)
+            v = None if i % 13 == 4 else float("nan") if i % 19 == 7 else v
+            out.append((uid, i, ts, v))
+        return out
+
+    # three events share each ts, and write() shuffles the rows
+    batch1 = rows(7, range(45), 0)
+    batch1 += rows(8, range(100, 106), 0) + rows(None, range(200, 204), 0)
+    batch2 = rows(7, range(45, 70), -30) + rows(8, range(106, 120), 3) + rows(None, range(204, 215), 0)
+    schema = "user_id long, event_id long, ts timestamp, value double, event_type string, props string, seen_at timestamp"
+
+    def write(batch, name):
+        extra = [r + (rnd.choice(["click", "view"]), f'{{"i": {r[1]}}}', t) for r in batch]
+        rnd.shuffle(extra)
+        spark.createDataFrame(extra, schema).coalesce(1).write.parquet(str(tmp_path / "src" / name))
+
+    def run():
+        stream = spark.readStream.schema(schema).parquet(str(tmp_path / "src" / "*"))
+        q = (
+            stateful.streaming_anomaly_zscore(stream, threshold=2.0, min_obs=5)
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / "out"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        write(batch1, "b1")
+        run()
+        write(batch2, "b2")
+        run()
+    finally:
+        spark.conf.set(key, prev)
+
+    got = sorted(
+        (tuple(r) for r in spark.read.parquet(str(tmp_path / "out")).collect()),
+        key=lambda r: r[1],
+    )
+    want = sorted(_welford_replay([batch1, batch2], threshold=2.0, min_obs=5), key=lambda r: r[1])
+    assert got == want
+    assert any(r[4] for r in want) and any(r[0] is None for r in want)
+    # a null-ts row with a value is replayed, not skipped
+    assert any(ts is None and v is not None and v == v for _, _, ts, v in batch1)
+
+
+def test_stateful_operators_send_python_only_replayed_columns(spark, sf_dir):
+    """Every column of the stateful operator's child crosses into Python,
+    converted from Arrow to pandas for each group: the child holds only the
+    replayed columns, and no string or timestamp among them."""
+    from market_data_pipeline_spark.streaming import jobs, stateful
+
+    ev = jobs.stream_events(spark, sf_dir)
+    assert {"event_type", "props"} <= set(ev.columns)
+    ops = [
+        (stateful.streaming_anomaly_zscore(ev), 4),
+        (stateful.streaming_cusum(ev.withColumns({"mean": F.lit(0.0), "std": F.lit(1.0)})), 6),
+        (stateful.running_totals(ev), 2),
+    ]
+    for out, width in ops:
+        node = out._jdf.queryExecution().analyzed()
+        while node.nodeName() != "FlatMapGroupsInPandasWithState":
+            node = node.children().apply(0)
+        cols = node.child().output()
+        types = [cols.apply(i).dataType().typeName() for i in range(cols.size())]
+        assert len(types) == width, types
+        assert not {"string", "timestamp", "timestamp_ntz"} & set(types), types
 
 def test_checkpoint_file_manager_never_overwrites(spark, tmp_path):
     """Checkpoint files go through the FileSystem-based manager, which keeps
