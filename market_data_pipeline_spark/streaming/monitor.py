@@ -23,7 +23,10 @@ def progress_rows(query: Any) -> list[dict]:
     sources), ``query_planning_ms``, ``add_batch_ms`` (running the batch into
     the sink), ``wal_commit_ms`` and ``commit_offsets_ms`` (the offset WAL
     and commit log writes), and ``state_commit_ms``, the state-store commit
-    time summed over stateful operators (each already sums its tasks)."""
+    time summed over stateful operators (each already sums its tasks).
+    ``state_partitions`` is the largest ``numShufflePartitions`` over the
+    stateful operators, the width the query's checkpoint fixed (0 for a
+    stateless query)."""
     out = []
     for p in query.recentProgress or []:
         state = p.get("stateOperators") or []
@@ -43,6 +46,7 @@ def progress_rows(query: Any) -> list[dict]:
                 "state_rows": sum(s.get("numRowsTotal", 0) for s in state),
                 "state_bytes": sum(s.get("memoryUsedBytes", 0) for s in state),
                 "n_state_operators": len(state),
+                "state_partitions": max((s.get("numShufflePartitions", 0) for s in state), default=0),
                 "watermark": (p.get("eventTime") or {}).get("watermark"),
             }
         )

@@ -91,3 +91,24 @@ spark.stop()
         cwd=tmp_path,
     )
     assert out.returncode == 0, out.stderr[-3000:]
+
+
+def test_worker_ignores_only_the_state_serializer_concat_warning():
+    import warnings
+
+    import pandas as pd
+
+    msg = "The behavior of DataFrame concatenation with empty or all-NA entries is deprecated."
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        pyworker.quiet_state_serializer_warning()
+        for module in ("pyspark.sql.pandas.serializers", "pyspark.sql.pandas.serializers_v2", "user_job"):
+            warnings.warn_explicit(msg, FutureWarning, "serializers.py", 1696, module=module)
+        # the serializer's own pattern, called from user code: pads with an all-NA frame
+        pd.concat([pd.DataFrame({"v": [1.0]}), pd.DataFrame(columns=["v"], index=[0])], ignore_index=True)
+    shown = [(w.filename, str(w.message)) for w in seen if issubclass(w.category, FutureWarning)]
+    assert [f for f, m in shown if m.startswith("The behavior of DataFrame concatenation")] == [
+        "serializers.py",
+        "serializers.py",
+        __file__,
+    ], shown

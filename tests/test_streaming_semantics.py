@@ -24,6 +24,8 @@ def test_append_emits_only_watermark_finalized_windows(spark, tmp_path):
     """Append-mode discipline (the guarantee Spark actually makes — late-row
     DROPPING is best-effort, finalization is not): a window appears in the
     append output only once the watermark passes its end."""
+    from market_data_pipeline_spark.streaming import jobs
+
     src = str(tmp_path / "stream_src")
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
     _write_batch(spark, src, [(1, t, 1.0), (2, t + dt.timedelta(minutes=5), 1.0)])
@@ -46,14 +48,15 @@ def test_append_emits_only_watermark_finalized_windows(spark, tmp_path):
         def sink(batch_df, _bid):
             emitted.extend(batch_df.collect())
 
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "ckpt_append"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with jobs.stream_width(spark):
+            q = (
+                agg.writeStream.outputMode("append")
+                .foreachBatch(sink)
+                .option("checkpointLocation", str(tmp_path / "ckpt_append"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
         return {r.win_start: r.total for r in emitted}
 
     # run 1: watermark ends at 11:05 — the 12:00 window is still open
@@ -70,6 +73,8 @@ def test_streaming_dedup_state_spans_batches(spark, tmp_path):
     """dropDuplicates state is remembered across micro-batches within the
     watermark horizon: a replay of batch-1's (event_id) in batch 2 is
     suppressed — the keep-last TTL-cache semantics, but fault-tolerant."""
+    from market_data_pipeline_spark.streaming import jobs
+
     src = str(tmp_path / "dedup_src")
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
     _write_batch(spark, src, [(1, t, 1.0), (2, t + dt.timedelta(minutes=1), 2.0)])
@@ -86,15 +91,16 @@ def test_streaming_dedup_state_spans_batches(spark, tmp_path):
         .parquet(src)
     )
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicates(["event_id", "ts"])
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_batches")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with jobs.stream_width(spark):
+        q = (
+            deduped.writeStream.outputMode("append")
+            .format("memory")
+            .queryName("dedup_batches")
+            .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     rows = spark.table("dedup_batches").collect()
     assert len(rows) == 3  # replay suppressed
     vals = {r.event_id: r.value for r in rows}
@@ -207,6 +213,8 @@ def test_late_rows_beyond_watermark_are_dropped(spark, tmp_path):
     late row for that window must be DROPPED — the finalized total never
     re-emits or changes (this is what bounds state at scale; a TTL cache
     would silently double-count the replay)."""
+    from market_data_pipeline_spark.streaming import jobs
+
     src = str(tmp_path / "late_src")
     ckpt = str(tmp_path / "late_ckpt")
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -227,14 +235,15 @@ def test_late_rows_beyond_watermark_are_dropped(spark, tmp_path):
         def sink(batch_df, _bid):
             emitted.extend(batch_df.collect())
 
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with jobs.stream_width(spark):
+            q = (
+                agg.writeStream.outputMode("append")
+                .foreachBatch(sink)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
         return [(r.win_start, r.total) for r in emitted]
 
     _write_batch(spark, src, [(1, t, 1.0), (2, t + dt.timedelta(minutes=10), 1.0)])
@@ -255,7 +264,7 @@ def test_stateful_state_survives_query_restart(spark, tmp_path):
     were lost, n would restart below min_obs and nothing could be flagged.
     This is the fault-tolerance contract a 1000-executor deployment leans
     on — executors die; state must not."""
-    from market_data_pipeline_spark.streaming import stateful
+    from market_data_pipeline_spark.streaming import jobs, stateful
 
     src = str(tmp_path / "restart_src")
     out = str(tmp_path / "restart_out")
@@ -269,15 +278,16 @@ def test_stateful_state_survives_query_restart(spark, tmp_path):
     def run_once():
         stream = spark.readStream.schema(schema).parquet(src)
         flagged = stateful.streaming_anomaly_zscore(stream, threshold=3.0, min_obs=10)
-        q = (
-            flagged.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with jobs.stream_width(spark):
+            q = (
+                flagged.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
     # run 1: 20 calm observations for user 7 (state: n=20)
     write([(7, i, t + dt.timedelta(minutes=i), 10.0 + (i % 5) * 0.1) for i in range(20)])
@@ -370,7 +380,7 @@ def test_anomaly_zscore_equals_sequential_replay_on_adversarial_rows(spark, tmp_
     timestamp columns, and a key split over several Arrow chunks."""
     import random
 
-    from market_data_pipeline_spark.streaming import stateful
+    from market_data_pipeline_spark.streaming import jobs, stateful
 
     rnd = random.Random(11)
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -397,15 +407,16 @@ def test_anomaly_zscore_equals_sequential_replay_on_adversarial_rows(spark, tmp_
 
     def run():
         stream = spark.readStream.schema(schema).parquet(str(tmp_path / "src" / "*"))
-        q = (
-            stateful.streaming_anomaly_zscore(stream, threshold=2.0, min_obs=5)
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / "out"))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with jobs.stream_width(spark):
+            q = (
+                stateful.streaming_anomaly_zscore(stream, threshold=2.0, min_obs=5)
+                .writeStream.format("parquet")
+                .option("path", str(tmp_path / "out"))
+                .option("checkpointLocation", str(tmp_path / "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
@@ -427,6 +438,137 @@ def test_anomaly_zscore_equals_sequential_replay_on_adversarial_rows(spark, tmp_
     assert any(r[4] for r in want) and any(r[0] is None for r in want)
     # a null-ts row with a value is replayed, not skipped
     assert any(ts is None and v is not None and v == v for _, _, ts, v in batch1)
+
+
+def _zscore_batch(b, rnd):
+    """Micro-batch ``b`` of a z-score stream: 10 events for each of 6 keys,
+    unique event ids, the last event of each key a spike."""
+    t = dt.datetime(2024, 1, 1, 12, 0, 0)
+    return [
+        (
+            u,
+            1000 * b + 10 * u + i,
+            t + dt.timedelta(minutes=10 * b + i),
+            10.0 + rnd.gauss(0, 1) + (6.0 if i == 9 else 0.0),
+        )
+        for u in range(6)
+        for i in range(10)
+    ]
+
+
+_ZSCORE_SCHEMA = "user_id long, event_id long, ts timestamp, value double"
+
+
+def _start_zscore(spark, src, out, ckpt):
+    """Start the z-score stream over the parquet files under ``src`` into a
+    parquet sink; returns the query and the stream width it started at."""
+    from market_data_pipeline_spark.streaming import jobs, stateful
+
+    stream = spark.readStream.schema(_ZSCORE_SCHEMA).parquet(src)
+    with jobs.stream_width(spark) as width:
+        q = (
+            stateful.streaming_anomaly_zscore(stream, threshold=2.0, min_obs=5)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return q, width
+
+
+def test_stream_width_rule_and_override(spark, tmp_path, monkeypatch):
+    """The state width is min(8, task slots) unless an integer override
+    says otherwise, and a stateful stream started inside ``stream_width``
+    runs at that width; the session's own width comes back afterwards,
+    also when the body raises."""
+    import random
+
+    from market_data_pipeline_spark.streaming import jobs, monitor
+
+    rule = min(8, spark.sparkContext.defaultParallelism)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
+    assert jobs.stream_shuffle_partitions() == rule
+    for raw, want in (("5", 5), ("0", 1), ("abc", rule)):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", raw)
+        assert jobs.stream_shuffle_partitions() == want, raw
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS")
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(RuntimeError):
+        with jobs.stream_width(spark):
+            raise RuntimeError("body failed")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(_zscore_batch(0, random.Random(2)), _ZSCORE_SCHEMA).write.parquet(src)
+    q, width = _start_zscore(spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert width == rule
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == width
+    assert {r["state_partitions"] for r in monitor.progress_rows(q)} == {width}
+
+
+def test_stream_width_is_durable_across_restart(spark, tmp_path, monkeypatch):
+    """A stateful query keeps the width its checkpoint was created with: a
+    z-score stream started with the override at 3 and restarted without it
+    still runs 3 state partitions, whatever the slot rule gives on this
+    host, and every emitted z-score equals the sequential Welford replay."""
+    import random
+
+    rnd = random.Random(9)
+    batches = [_zscore_batch(0, rnd), _zscore_batch(1, rnd)]
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "3")
+    spark.createDataFrame(batches[0], _ZSCORE_SCHEMA).coalesce(1).write.parquet(f"{src}/b1")
+    q, width = _start_zscore(spark, f"{src}/*", out, ckpt)
+    assert width == 3 and q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 3
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS")
+    spark.createDataFrame(batches[1], _ZSCORE_SCHEMA).coalesce(1).write.parquet(f"{src}/b2")
+    q, _ = _start_zscore(spark, f"{src}/*", out, ckpt)
+    assert q.lastProgress["numInputRows"] == len(batches[1])
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == 3
+
+    got = sorted((tuple(r) for r in spark.read.parquet(out).collect()), key=lambda r: r[1])
+    want = sorted(_welford_replay(batches, threshold=2.0, min_obs=5), key=lambda r: r[1])
+    assert got == want
+    assert any(r[4] for r in want if r[1] >= 1000)  # the restarted batch flags spikes
+
+
+def test_state_function_error_reaches_driver_with_traceback(spark, tmp_path):
+    """An exception raised inside an ``applyInPandasWithState`` function
+    fails the query, and the driver sees its message and Python traceback
+    (the worker daemon's warning filter hides nothing else)."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from market_data_pipeline_spark.streaming import jobs
+
+    def boom(key, pdfs, state):
+        raise ValueError(f"state function failed on key {key[0]}")
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(7, 1.0)], "user_id long, value double").write.parquet(src)
+    out = (
+        spark.readStream.schema("user_id long, value double")
+        .parquet(src)
+        .groupBy("user_id")
+        .applyInPandasWithState(boom, "user_id long", "n long", "append", GroupStateTimeout.NoTimeout)
+    )
+    with jobs.stream_width(spark):
+        q = (
+            out.writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        with pytest.raises(StreamingQueryException) as err:
+            q.awaitTermination()
+    msg = str(err.value)
+    assert "state function failed on key 7" in msg and "Traceback" in msg, msg[-2000:]
 
 
 def test_stateful_operators_send_python_only_replayed_columns(spark, sf_dir):
@@ -515,24 +657,27 @@ def test_streaming_sessionize_matches_batch_twin(spark, sf_dir):
 
 def test_progress_monitor_extracts_state_and_watermark(spark, sf_dir, tmp_path):
     """The monitor must see real numbers from a stateful stream: input rows,
-    a stateful operator with state rows, and an advancing watermark."""
+    a stateful operator with state rows, the state width the query started
+    with, and an advancing watermark."""
     from market_data_pipeline_spark.streaming import jobs, monitor
 
     ev = jobs.stream_events(spark, sf_dir)
     agg = jobs.tumbling_window_agg(ev, width="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("mon_probe")
-        .option("checkpointLocation", str(tmp_path / "mon_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with jobs.stream_width(spark) as width:
+        q = (
+            agg.writeStream.outputMode("append")
+            .format("memory")
+            .queryName("mon_probe")
+            .option("checkpointLocation", str(tmp_path / "mon_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     rows = monitor.progress_rows(q)
     assert len(rows) >= 1
     assert sum(r["num_input_rows"] for r in rows) > 0
     assert any(r["n_state_operators"] > 0 for r in rows)
+    assert {r["state_partitions"] for r in rows if r["n_state_operators"] > 0} == {width}
     assert any(r["watermark"] for r in rows)
     for r in rows:
         for k in (
@@ -552,7 +697,7 @@ def test_sessionize_state_survives_query_restart(spark, tmp_path):
     """An OPEN session spanning a full query restart must be extended by
     post-restart events (state recovered from checkpoint), then emitted
     once by watermark timeout as ONE merged session — not two fragments."""
-    from market_data_pipeline_spark.streaming import stateful
+    from market_data_pipeline_spark.streaming import jobs, stateful
 
     src = str(tmp_path / "sess_src")
     out = str(tmp_path / "sess_out")
@@ -566,15 +711,16 @@ def test_sessionize_state_survives_query_restart(spark, tmp_path):
     def run_once():
         stream = spark.readStream.schema(schema).parquet(src)
         sess = stateful.streaming_sessionize(stream, gap_minutes=30, watermark="1 minute")
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with jobs.stream_width(spark):
+            q = (
+                sess.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
     # run 1: two events 10 min apart — session stays open (watermark
     # reaches only ts+9min, far before end+gap)
@@ -598,7 +744,7 @@ def test_sessionize_seq_survives_timeout_eviction(spark, tmp_path):
     """ADVICE r1: after a session is evicted by event-time timeout, a
     returning user must CONTINUE the session ordinal (seq 2), not re-emit
     (user_id, 1) — the tombstone state keeps the counter across eviction."""
-    from market_data_pipeline_spark.streaming import stateful
+    from market_data_pipeline_spark.streaming import jobs, stateful
 
     src = str(tmp_path / "seq_src")
     out = str(tmp_path / "seq_out")
@@ -612,15 +758,16 @@ def test_sessionize_seq_survives_timeout_eviction(spark, tmp_path):
     def run_once():
         stream = spark.readStream.schema(schema).parquet(src)
         sess = stateful.streaming_sessionize(stream, gap_minutes=30, watermark="1 minute")
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with jobs.stream_width(spark):
+            q = (
+                sess.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
     # run 1: user 1 session (2 events) + a far-future row advancing the
     # watermark past end+gap → session 1 is emitted and state evicted
@@ -660,7 +807,7 @@ def test_sessionize_backdated_event_extends_session_start(spark, tmp_path):
     """ADVICE r1: a late-but-in-watermark event EARLIER than the open
     session's start must pull session_start back (min), not be silently
     folded in with the old start."""
-    from market_data_pipeline_spark.streaming import stateful
+    from market_data_pipeline_spark.streaming import jobs, stateful
 
     src = str(tmp_path / "bd_src")
     out = str(tmp_path / "bd_out")
@@ -674,15 +821,16 @@ def test_sessionize_backdated_event_extends_session_start(spark, tmp_path):
     def run_once():
         stream = spark.readStream.schema(schema).parquet(src)
         sess = stateful.streaming_sessionize(stream, gap_minutes=30, watermark="10 minutes")
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with jobs.stream_width(spark):
+            q = (
+                sess.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
     # batch 1: session opens at t+10m (watermark ends up at t exactly)
     write([(1, t + dt.timedelta(minutes=10), 1.0)])
@@ -706,7 +854,7 @@ def test_sessionize_beyond_gap_backdated_event_is_own_session(spark, tmp_path):
     """A late-but-in-watermark event MORE than gap before the open session's
     start must become its own (earlier) closed session — the batch twin
     would split there — never drag session_start across a multi-hour hole."""
-    from market_data_pipeline_spark.streaming import stateful
+    from market_data_pipeline_spark.streaming import jobs, stateful
 
     src = str(tmp_path / "bg_src")
     out = str(tmp_path / "bg_out")
@@ -720,15 +868,16 @@ def test_sessionize_beyond_gap_backdated_event_is_own_session(spark, tmp_path):
     def run_once():
         stream = spark.readStream.schema(schema).parquet(src)
         sess = stateful.streaming_sessionize(stream, gap_minutes=30, watermark="6 hours")
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with jobs.stream_width(spark):
+            q = (
+                sess.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
     # batch 1: open session at 12:00 (watermark lag 6h keeps 09:00 on-time)
     write([(1, t, 1.0)])
@@ -889,7 +1038,7 @@ def test_sessionize_eviction_replay_three_batches(spark, tmp_path):
     are below the watermark by then, so the engine must drop them (the
     emitted session is final; no retraction, no duplicate, no merge) and
     the seq counter must keep advancing 1→2→3 across every eviction."""
-    from market_data_pipeline_spark.streaming import stateful
+    from market_data_pipeline_spark.streaming import jobs, stateful
 
     src = str(tmp_path / "ev3_src")
     out = str(tmp_path / "ev3_out")
@@ -903,15 +1052,16 @@ def test_sessionize_eviction_replay_three_batches(spark, tmp_path):
     def run_once():
         stream = spark.readStream.schema(schema).parquet(src)
         sess = stateful.streaming_sessionize(stream, gap_minutes=30, watermark="1 minute")
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with jobs.stream_width(spark):
+            q = (
+                sess.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
     h = dt.timedelta(hours=1)
     m = dt.timedelta(minutes=1)
